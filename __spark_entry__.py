@@ -2842,73 +2842,25 @@ def q_stream_enrich(spark, sf):
 
 def q_stream_cdc(spark, sf):
     """Streaming CDC apply earning a driver row: the q_merge_upsert
-    changeset is written as a parquet change log, streamed with
-    foreachBatch MERGE into a live snapshot (compaction -> broadcast
-    anti-join apply -> atomic directory swap,
-    streaming/cdc.py::stream_apply_changes), and the resulting
-    snapshot must hash-match the one-shot batch MERGE oracle — the
-    continuous and batch forms of CDC apply agree by construction.
-    Snapshot/checkpoint dirs live under a fresh tempdir (left for the
-    OS to reap: the returned DataFrame lazily reads the live dir)."""
-    import tempfile
-
-    from spectrify_spark.streaming import cdc as CDC
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = tempfile.mkdtemp(prefix="q_stream_cdc_")
-    o = _t(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
-    mod = F.col("o_orderkey") % 10
-    ch_d = o.filter(mod == 0).withColumn("op", F.lit("D"))
-    ch_u = (
-        o.filter(mod == 1)
-        .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(1000.0))
-        .withColumn("op", F.lit("U"))
-    )
-    ch_i = o.filter(mod == 2).select(
-        (F.col("o_orderkey") + F.lit(100_000_000)).alias("o_orderkey"),
-        "o_custkey",
-        F.lit(1.0).alias("o_totalprice"),
-        F.lit("I").alias("op"),
-    )
-    changes = ch_d.unionByName(ch_u).unionByName(ch_i)
-    changes_dir = f"{work}/changes"
-    changes.write.parquet(changes_dir)
-    snap_dir = f"{work}/snapshot"
-    o.write.parquet(CDC.live_snapshot_path(snap_dir))
-    stream = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(changes_dir)
-    )
-    q = CDC.stream_apply_changes(
-        stream,
-        snap_dir,
-        key="o_orderkey",
-        checkpoint_dir=f"{work}/ckpt",
-    )
-    q.awaitTermination()
-    return CDC.read_snapshot(spark, snap_dir)
-
-
-def q_stream_publish(spark, sf):
-    """Streaming CDC apply with the VERSIONED-PUBLISH commit
-    (streaming/cdc.py::stream_apply_changes_published — new r13): the
-    same change stream as q_stream_cdc, but every micro-batch lands
-    as an immutable published version with an atomic pointer flip
-    (catalog/publish.py) instead of a directory rename — the
-    object-store-safe commit cdc.py's scope note called for.  Readers
-    resolve the pointer first, so they always see a complete
-    snapshot; the keep window gives micro-batch-level time travel.
-    The final published content must hash-match the one-shot batch
-    MERGE oracle — the continuous, batch, and versioned forms of CDC
-    apply agree by construction."""
+    changeset is written as a parquet change log, the base orders
+    snapshot is published as v1, and the log is streamed through
+    streaming/cdc.py::stream_apply_changes_published — foreachBatch
+    compaction -> broadcast anti-join MERGE -> one immutable published
+    version per micro-batch behind an atomic pointer flip
+    (catalog/publish.py).  Readers resolve the pointer first, so they
+    always see a complete snapshot; the keep window gives
+    micro-batch-level time travel.  The result must hash-match the
+    one-shot batch MERGE oracle — the continuous and batch forms of
+    CDC apply agree by construction.  Work dirs live under a fresh
+    tempdir (left for the OS to reap: the returned DataFrame lazily
+    reads the pointed version)."""
     import tempfile
 
     from spectrify_spark.catalog.publish import publish, read_published
     from spectrify_spark.streaming import cdc as CDC
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    work = tempfile.mkdtemp(prefix="q_stream_publish_")
+    work = tempfile.mkdtemp(prefix="q_stream_cdc_")
     o = _t(spark, sf, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     mod = F.col("o_orderkey") % 10
     ch_d = o.filter(mod == 0).withColumn("op", F.lit("D"))
@@ -2942,6 +2894,14 @@ def q_stream_publish(spark, sf):
     )
     q.awaitTermination()
     return read_published(spark, root)
+
+
+def q_stream_publish(spark, sf):
+    """Streaming CDC apply with the VERSIONED-PUBLISH commit (r13),
+    keyed for the publish family: the same change stream, sink and
+    batch-MERGE oracle as q_stream_cdc, since the published sink is the
+    only CDC sink."""
+    return q_stream_cdc(spark, sf)
 
 
 def q_funnel(spark, sf):
@@ -7266,8 +7226,11 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_parts
             FROM labels GROUP BY 1 ORDER BY 1
         """,
+        # MATERIALIZED: DuckDB otherwise re-runs the brute-force
+        # all-pairs Jaccard inside every step of the recursion (44 s
+        # vs 12 s at sf0.001, same rows)
         "q_dedup_clusters": f"""
-            WITH RECURSIVE pairs AS (
+            WITH RECURSIVE pairs AS MATERIALIZED (
               SELECT id_a, id_b FROM ({_SQL_BRUTE_JACCARD}) WHERE jaccard >= 0.2),
             edges AS (
               SELECT id_a AS src, id_b AS dst FROM pairs

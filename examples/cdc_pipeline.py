@@ -1,5 +1,6 @@
 """CDC snapshot maintenance: batch MERGE, reconciliation diff, and the
-streaming apply loop over the same change log.
+streaming apply loop over the same change log, committed as published
+versions.
 
     python examples/cdc_pipeline.py /root/testdata/sf0.001 /tmp/cdc_demo
 """
@@ -10,6 +11,7 @@ import sys
 
 from pyspark.sql import functions as F
 
+from spectrify_spark.catalog.publish import publish, read_published
 from spectrify_spark.operators.relational import diff_summary, merge_changes
 from spectrify_spark.session import get_spark
 from spectrify_spark.sources.parquet import read_table
@@ -34,20 +36,21 @@ def main(sf_dir: str, work: str) -> None:
     # 1. one-shot batch MERGE
     merged = merge_changes(base, changes, key="o_orderkey")
 
-    # 2. the same log applied as a STREAM into a live snapshot
-    changes_dir, snap_dir = f"{work}/changes", f"{work}/snapshot"
+    # 2. the same log applied as a STREAM: the base is published as v1,
+    #    every micro-batch publishes the next version
+    changes_dir, root = f"{work}/changes", f"{work}/snapshot"
     changes.write.mode("overwrite").parquet(changes_dir)
-    base.write.mode("overwrite").parquet(cdc.live_snapshot_path(snap_dir))
-    q = cdc.stream_apply_changes(
+    publish(base, root)
+    q = cdc.stream_apply_changes_published(
         spark.readStream.schema(changes.schema).parquet(changes_dir),
-        snap_dir,
+        root,
         key="o_orderkey",
         checkpoint_dir=f"{work}/ckpt",
     )
     q.awaitTermination()
 
     # 3. reconcile: streamed snapshot vs batch MERGE must be identical
-    diff_summary(merged, cdc.read_snapshot(spark, snap_dir), "o_orderkey").show()
+    diff_summary(merged, read_published(spark, root), "o_orderkey").show()
     print("empty diff = the continuous and batch applies agree")
 
 

@@ -325,16 +325,11 @@ def cow_referenced_versions(
     one) still reference — the set a vacuum of those manifests'
     survivors must not evict.  Driver-side JSON reads, bounded by
     |versions| x |partitions|."""
-    from spectrify_spark.catalog.publish import (
-        _is_committed_or_legacy,
-        _versions,
-    )
+    from spectrify_spark.catalog.publish import _is_committed, _versions
 
     if manifest_versions is None:
         manifest_versions = [
-            v
-            for v in _versions(root, spark)
-            if _is_committed_or_legacy(root, v, spark)
+            v for v in _versions(root, spark) if _is_committed(root, v, spark)
         ]
     refs: set[int] = set()
     for v in manifest_versions:

@@ -4,8 +4,10 @@ Spark-native re-expression of the reference's create stage:
 
 - parquet external table  (reference spectrify/create.py:76-96)
 - CSV/OpenCSVSerde table  (reference spectrify/create.py:99-154)
-- column DDL emission, NOT NULL/DEFAULT dropped, DOUBLE->FLOAT
-  substitution (reference spectrify/create.py:11-13, 34-53)
+- column DDL emission, NOT NULL/DEFAULT dropped (reference
+  spectrify/create.py:34-53); DOUBLE is emitted as DOUBLE, not the
+  reference's FLOAT (create.py:11-13), because Spark SQL's FLOAT is
+  4-byte
 - ADD PARTITION           (reference examples/weekly_partitions.py:107-129)
 
 DDL strings are pure functions (golden-string testable, mirroring the

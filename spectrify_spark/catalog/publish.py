@@ -4,10 +4,10 @@ The reference pipeline's output contract is "overwrite the S3 prefix,
 then repoint the external table" (reference spectrify/transform.py:
 export -> convert -> create); at 100 TB that window between landing
 files and repointing is a correctness hole: a reader mid-scan sees a
-half-written dataset.  The CDC snapshot sink (streaming/cdc.py) closes
-it with a directory rename-swap, which still un-links a directory a
-reader may be scanning.  This module is the stronger, simpler
-protocol table formats use under the hood:
+half-written dataset.  This module closes it with the protocol table
+formats use under the hood — the engine's one commit protocol, shared
+by batch publishes, directory payloads, snapshots and every streaming
+sink:
 
 - every publish lands a COMPLETE new version directory ``v=N``
   (immutable once the pointer flips — never rewritten, never renamed);
@@ -107,59 +107,6 @@ LOCK_WAIT_SECONDS = 600.0
 #: past any legitimate land_fn duration; publishes that stream for
 #: longer should refresh the lock mtime themselves or raise this.
 LOCK_STALE_SECONDS = 3600.0
-
-#: root-level INTENT sentinel of the legacy-marker migration: present
-#: only between the migration's first and last stamp, so a crash
-#: mid-stamp (which creates the same markers-present/pointed-unmarked
-#: shape as out-of-band marker loss) stays distinguishable and the
-#: next writer RESUMES stamping instead of refusing forever.
-MIGRATION_SENTINEL = "_spectrify_legacy_migration.json"
-
-
-def _migration_sentinel_present(root: str, spark=None) -> bool:
-    lp = _local_path(root)
-    if lp is not None:
-        return os.path.isfile(os.path.join(lp, MIGRATION_SENTINEL))
-    from spectrify_spark.operators._sidecar import read_json_sidecar
-
-    return (
-        read_json_sidecar(
-            _require_spark(spark, root, "read"), root, MIGRATION_SENTINEL
-        )
-        is not None
-    )
-
-
-def _write_migration_sentinel(root: str, spark=None) -> None:
-    lp = _local_path(root)
-    if lp is not None:
-        with open(os.path.join(lp, MIGRATION_SENTINEL), "w") as fh:
-            json.dump({"migrating": True}, fh)
-        return
-    from spectrify_spark.operators._sidecar import write_json_sidecar
-
-    write_json_sidecar(
-        _require_spark(spark, root, "migrate"),
-        root,
-        MIGRATION_SENTINEL,
-        {"migrating": True},
-    )
-
-
-def _remove_migration_sentinel(root: str, spark=None) -> None:
-    lp = _local_path(root)
-    if lp is not None:
-        try:
-            os.remove(os.path.join(lp, MIGRATION_SENTINEL))
-        except FileNotFoundError:
-            pass
-        return
-    from spectrify_spark.operators._sidecar import index_fs
-
-    fs, _, jvm = index_fs(_require_spark(spark, root, "migrate"), root)
-    fs.delete(
-        jvm.org.apache.hadoop.fs.Path(_join(root, MIGRATION_SENTINEL)), False
-    )
 
 
 def _local_path(root: str) -> "str | None":
@@ -271,116 +218,6 @@ def _is_committed(root: str, n: int, spark=None) -> bool:
         fs.exists(
             jvm.org.apache.hadoop.fs.Path(_join(root, f"v={n}") + "/" + COMMITTED)
         )
-    )
-
-
-def _migrate_legacy_markers(root: str, spark=None) -> None:
-    """Grandfather datasets published BEFORE the commit marker existed.
-    New-code publishes always mark before flipping, so a POINTED
-    version without a marker can only mean the dataset predates the
-    protocol — in that case every version <= the pointer was published
-    by legacy code and gets stamped.  One-shot and idempotent (after
-    stamping, the pointed version carries a marker and this is a
-    single exists() check).  Without this, the first post-upgrade
-    vacuum would treat the whole retained history as crashed partials
-    — deleting it — and time travel would refuse the live pointed
-    version.  A legacy crashed partial below the pointer gets stamped
-    too: indistinguishable by construction, and stamping merely
-    preserves the behavior legacy datasets already had.
-
-    WRITER PATHS ONLY (publish / vacuum): stamping from a read would
-    make a pure read mutate the dataset — on read-only storage or for
-    a reader without write permission, time travel on a legacy dataset
-    would fail with a WRITE error instead of returning rows.  Read
-    paths use the read-only twin :func:`_is_committed_or_legacy`,
-    which applies the same no-marker-anywhere rule without writing.
-
-    MARKER LOSS vs LEGACY (r14 ADVICE): legacy status requires that NO
-    version anywhere in the dataset carries a marker.  A dataset where
-    SOME version is marked but the pointed one is not can only mean
-    the pointed version's marker was lost out-of-band (manual
-    deletion, partial restore) — stamping everything <= cur there
-    would re-certify genuine crashed partials sight-unseen, so the
-    migration logs a WARNING and leaves the markers alone.  Recovery:
-    restore the missing ``COMMITTED`` file from backup (it is a tiny
-    JSON sentinel — recreating it re-certifies the version), or
-    republish; unmarked versions stay refused for explicit time
-    travel until then, while pointer-path reads (version=None) are
-    unaffected.  :func:`vacuum` QUARANTINES (never removes) unmarked
-    below-pointer versions so the recovery window stays open.
-
-    CRASH SAFETY (r15 self-review): partial stamping would be
-    indistinguishable from marker loss under the rule above — a crash
-    after the first ``_mark_committed`` would strand the remaining
-    legacy versions refused forever.  The migration therefore writes
-    an INTENT sentinel (:data:`MIGRATION_SENTINEL`) at the dataset
-    root before the first stamp and removes it after the last: a
-    pointed-but-unmarked dataset WITH the sentinel is a crashed
-    migration and resumes stamping (readers likewise honor the
-    sentinel as legacy status); without it, markers-present means
-    marker loss and the migration refuses."""
-    cur = current_version(root, spark)
-    if cur is None or _is_committed(root, cur, spark):
-        # a crash between the last stamp and the sentinel removal
-        # leaves a stale sentinel on a fully-migrated dataset
-        if cur is not None and _migration_sentinel_present(root, spark):
-            _remove_migration_sentinel(root, spark)
-        return
-    vs = _versions(root, spark)
-    resuming = _migration_sentinel_present(root, spark)
-    if not resuming and any(_is_committed(root, v, spark) for v in vs):
-        logger.warning(
-            "publish dataset at %s: pointed version v=%d has no "
-            "COMMITTED marker but other versions do — out-of-band "
-            "marker loss, NOT a legacy dataset; refusing to stamp "
-            "(restore the marker file from backup or republish; "
-            "vacuum quarantines the unmarked versions meanwhile)",
-            root,
-            cur,
-        )
-        return
-    _write_migration_sentinel(root, spark)
-    for v in vs:
-        if v <= cur:
-            _mark_committed(spark, root, v)
-    _remove_migration_sentinel(root, spark)
-
-
-def _is_committed_or_legacy(root: str, n: int, spark=None) -> bool:
-    """READ-ONLY committed check for reader paths: a version counts as
-    committed if it carries the marker, OR if the dataset is a legacy
-    (pre-marker) one — NO version anywhere carries a marker, which
-    new-code publishes cannot produce — and ``n`` is at or below the
-    pointer (exactly the set :func:`_migrate_legacy_markers` would
-    stamp).  Never writes, so time travel works on read-only storage;
-    the first writer-path operation (publish/vacuum) stamps the
-    markers durably.
-
-    The no-marker-ANYWHERE requirement (r14 ADVICE hardening): if any
-    version is marked, the dataset went through the marker protocol,
-    so a pointed-but-unmarked version means out-of-band marker loss —
-    granting legacy status there would make every uncommitted crashed
-    partial at or below the pointer readable via explicit-version
-    time travel.  Refusing is the conservative direction (a refusal,
-    never wrong rows); see :func:`_migrate_legacy_markers` for the
-    documented recovery.  The extra cost — one marker existence check
-    per version — lands only on the rare path where the requested
-    version itself is unmarked."""
-    if _is_committed(root, n, spark):
-        return True
-    cur = current_version(root, spark)
-    if cur is None or n > cur:
-        return False
-    # a crashed migration (intent sentinel present) is legacy by
-    # construction — partial stamping must not flip readers to refusal
-    # between two writer runs
-    if _migration_sentinel_present(root, spark):
-        return True
-    # legacy (pre-marker) dataset == zero markers anywhere; the pointed
-    # version is one of the checked set, so the old pointed-unmarked
-    # condition is subsumed
-    return not any(
-        _is_committed(root, v, spark) for v in _versions(root, spark)
     )
 
 
@@ -951,8 +788,7 @@ def _publish_version(
     """The shared protocol tail of :func:`publish` / :func:`publish_dir`
     (ONE implementation so the write order cannot diverge between the
     DataFrame and directory-payload forms): ensure the root exists,
-    grandfather legacy markers (writer path — stamping is allowed
-    here), sweep crashed-publish leftovers PAST the pointer
+    sweep crashed-publish leftovers PAST the pointer
     (single-writer: the pointer never named those dirs; the
     COMMITTED-but-unflipped leftover is the dangerous one — once the
     pointer advances past it, vacuum could no longer tell it from a
@@ -1005,7 +841,6 @@ def _publish_version(
     try:
         if pre_land is not None:
             pre_land()  # e.g. the schema-evolution check, under the lock
-        _migrate_legacy_markers(root, spark)
         cur0 = current_version(root, spark)
         salvaged: list[int] = []
         for v in _versions(root, spark):
@@ -1128,10 +963,9 @@ def read_published(
     if v is None:
         raise FileNotFoundError(f"read_published: nothing published at {root!r}")
     if version is not None:
-        # explicit time travel: dir-exists + READ-ONLY committed guard
-        # (crashed partials refused; legacy pre-marker datasets read
-        # without requiring write permission) — the same shared guard
-        # the pruned-scan readers run
+        # explicit time travel: dir-exists + committed guard (crashed
+        # partials refused) — the same shared guard the pruned-scan
+        # readers run
         _check_time_travel_target("read_published", root, v, spark)
     elif not _dir_exists(root, f"v={v}", spark):
         raise FileNotFoundError(
@@ -1144,18 +978,18 @@ def read_published(
 
 def _check_time_travel_target(fn: str, root: str, v: int, spark) -> None:
     """Shared explicit-``version=`` guard of the pruned-scan readers:
-    the directory must exist AND be committed (read-only legacy-aware
-    check) — otherwise time travel through the pruned scans would
-    silently scan a crashed publish's partial directory and return
-    incomplete data, contradicting the module contract that time
-    travel refuses them (the pointer path never resolves to one by
-    write order, so only explicit versions need this)."""
+    the directory must exist AND carry its commit marker — otherwise
+    time travel through the pruned scans would silently scan a crashed
+    publish's partial directory and return incomplete data,
+    contradicting the module contract that time travel refuses them
+    (the pointer path never resolves to one by write order, so only
+    explicit versions need this)."""
     if not _dir_exists(root, f"v={v}", spark):
         raise FileNotFoundError(
             f"{fn}: version {v} not found at {root!r} "
             f"(have {_versions(root, spark)}; it may have been vacuumed)"
         )
-    if not _is_committed_or_legacy(root, v, spark):
+    if not _is_committed(root, v, spark):
         raise FileNotFoundError(
             f"{fn}: version {v} at {root!r} exists but was never "
             "committed (crashed publish) — it is not a readable "
@@ -1219,11 +1053,11 @@ def vacuum(
     COMMITTED dir past the pointer
     is a publish between its marker and its flip — never touched.
     BELOW the pointer an uncommitted dir is never removed either —
-    after the legacy migration has run, it can only mean out-of-band
-    marker loss (every below-pointer version was once pointed, hence
-    once marked), and deleting it would destroy the data the
-    documented recovery (restoring the ``COMMITTED`` sentinel) exists
-    to save; it is quarantined with a WARNING instead.
+    every below-pointer version was once pointed, hence once marked, so
+    it can only mean out-of-band marker loss, and deleting it would
+    destroy the data the documented recovery (restoring the
+    ``COMMITTED`` file) exists to save; it is quarantined with a
+    WARNING instead.
     (Publish start additionally sweeps ALL above-pointer leftovers
     under the single-writer guarantee, so a committed-unflipped crash
     cannot survive into a later pointer regime and masquerade as
@@ -1244,7 +1078,6 @@ def _vacuum_locked(
     protect: "set[int] | None",
     snapshots: "list[str] | None",
 ) -> list[int]:
-    _migrate_legacy_markers(root, spark)
     pinned: set[int] = {int(v) for v in (protect or ())}
     for sroot in snapshots or ():
         for comp_root, vers in snapshot_pinned_versions(sroot, spark).items():
@@ -1278,15 +1111,13 @@ def _vacuum_locked(
             )
             continue
         if cur is not None and v <= cur and not _is_committed(root, v, spark):
-            # QUARANTINE, not removal (r15 self-review): the migration
-            # above stamps genuine legacy versions, so an unmarked
-            # below-pointer dir here can only be out-of-band marker
-            # loss — by write order every below-pointer version was
-            # once pointed, hence once marked.  Deleting it would
-            # destroy the very data the documented recovery (restore
-            # the COMMITTED sentinel) exists to save; above-pointer
-            # unmarked dirs remain true crashed partials and are
-            # removed as before.
+            # QUARANTINE, not removal (r15 self-review): by write
+            # order every below-pointer version was once pointed, hence
+            # once marked, so an unmarked one here can only be
+            # out-of-band marker loss.  Deleting it would destroy the
+            # very data the documented recovery (restore the COMMITTED
+            # file) exists to save; above-pointer unmarked dirs remain
+            # true crashed partials and are removed as before.
             logger.warning(
                 "vacuum at %s: v=%d sits below the pointer with no "
                 "COMMITTED marker (out-of-band marker loss?) — "
@@ -1625,9 +1456,8 @@ def publish_snapshot(
                 f"publish_snapshot: component {name!r} has nothing "
                 f"published at {droot!r}"
             )
-        # exists + committed (read-only legacy-aware): pinning a
-        # crashed partial would bake an unreadable version into every
-        # future read of this snapshot
+        # exists + committed: pinning a crashed partial would bake an
+        # unreadable version into every future read of this snapshot
         _check_time_travel_target(f"publish_snapshot[{name}]", droot, v, spark)
         # ... and POINTER-RESOLVABLE (r16 self-review): a committed but
         # never-flipped version above the pointer passes the committed
@@ -1786,7 +1616,7 @@ def snapshot_pinned_versions(root: str, spark=None) -> dict:
     all driver-side JSON reads."""
     out: dict = {}
     for v in _versions(root, spark):
-        if not _is_committed_or_legacy(root, v, spark):
+        if not _is_committed(root, v, spark):
             continue
         try:
             m = read_snapshot_manifest(root, version=v, spark=spark)

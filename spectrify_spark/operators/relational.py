@@ -331,8 +331,9 @@ def merge_changes(
     ``changes`` must carry all of ``base``'s columns (plus ``op_col``)
     and at most one row per key — the latest-wins compaction
     (``dedup.dedup_exact`` with a descending tie-break) runs upstream
-    if the raw log has more; ``streaming.cdc.stream_apply_changes``
-    wires both for the continuous case.
+    if the raw log has more;
+    ``streaming.cdc.stream_apply_changes_published`` wires both for
+    the continuous case.
 
     A change row whose ``op_col`` is NULL or outside ``allowed_ops``
     fails the job (``raise_error`` inside the upsert projection) rather
@@ -385,9 +386,9 @@ def table_diff(
     ``left`` -> ``right`` (added = only in right).
 
     The reconciliation primitive for CDC pipelines: after
-    ``merge_changes`` / ``streaming.cdc.stream_apply_changes``, diff
-    the snapshot against the source-of-truth extract and expect zero
-    rows.  NULLs compare null-safely (NULL == NULL is unchanged).
+    ``merge_changes`` / ``streaming.cdc.stream_apply_changes_published``,
+    diff the snapshot against the source-of-truth extract and expect
+    zero rows.  NULLs compare null-safely (NULL == NULL is unchanged).
 
     Scale shape: one full-outer equi-join on the key — both sides
     shuffle once on their key (co-partitioned); the status projection

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 
 from spectrify_spark.functions import text as TX
 from spectrify_spark.pipelines.training_data import annotate_gate
+from spectrify_spark.streaming.cdc import _merge_and_publish
 
 
 def stream_curate(
@@ -143,13 +144,6 @@ def stream_curate_dedup_publish(
     corpus sizes raise the trigger interval or fold the stream into
     periodic batch compactions.
     """
-    from spectrify_spark.catalog.publish import (
-        current_version,
-        publish,
-        read_published,
-    )
-    from spectrify_spark.operators.relational import merge_changes
-
     curated = stream_curate(
         docs_stream,
         id_col=id_col,
@@ -182,19 +176,12 @@ def stream_curate_dedup_publish(
         # one map pass already; a persist only adds cache-write cost.
         if not batch.take(1):
             return
-        spark = batch.sparkSession
         # the watermark dedup guarantees <= 1 row per id WITHIN a batch
         # (merge_changes' contract); 'U' = idempotent upsert by id
         changes = batch.select(*out_cols).withColumn("op", F.lit("U"))
-        if current_version(root, spark) is not None:
-            # the sink maintains this table, so the written schema is
-            # statically known — skip footer inference (r18, one job
-            # per micro-batch read-back)
-            base = read_published(spark, root, schema=base_schema)
-        else:
-            base = spark.createDataFrame([], base_schema)
-        nxt = merge_changes(base, changes, "id", op_col="op", delete_op="D")
-        publish(nxt, root, keep_versions=keep_versions)
+        _merge_and_publish(
+            changes, root, base_schema, "id", keep_versions=keep_versions
+        )
 
     writer = deduped.writeStream.foreachBatch(apply_batch)
     if checkpoint_dir:
@@ -260,13 +247,11 @@ def stream_curate_snapshot_publish(
     Single writer per dataset, as every publish.  Returns the started
     StreamingQuery."""
     from spectrify_spark.catalog.publish import (
-        current_version,
         publish,
         publish_snapshot,
         read_published,
         vacuum,
     )
-    from spectrify_spark.operators.relational import merge_changes
 
     curated = stream_curate(
         docs_stream,
@@ -298,19 +283,19 @@ def stream_curate_snapshot_publish(
     def _apply_batch_inner(batch: DataFrame) -> None:
         spark = batch.sparkSession
         changes = batch.select(*out_cols).withColumn("op", F.lit("U"))
-        if current_version(corpus_root, spark) is not None:
-            # known written schema: skip footer inference (r18)
-            base = read_published(spark, corpus_root, schema=base_schema)
-        else:
-            base = spark.createDataFrame([], base_schema)
-        nxt = merge_changes(base, changes, "id", op_col="op", delete_op="D")
         # keep_versions + 1 on the components: the oldest retained
         # snapshot still pins its component versions until
         # publish_snapshot below retires it, so the pin-unaware
         # publish-tail vacuum here must keep one extra slot (r16
         # ADVICE off-by-one — durable if the stream crashes between
         # these publishes and the snapshot flip)
-        cv = publish(nxt, corpus_root, keep_versions=keep_versions + 1)
+        cv = _merge_and_publish(
+            changes,
+            corpus_root,
+            base_schema,
+            "id",
+            keep_versions=keep_versions + 1,
+        )
         # derive from the WRITTEN immutable version (one parquet read,
         # no merge-plan recompute) — the pinned pair cannot diverge
         counts = (

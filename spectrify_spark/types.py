@@ -89,13 +89,16 @@ def schema_from_columns(columns: list[tuple[str, str]]) -> T.StructType:
     )
 
 
-# Spark type -> external-table DDL name.  DOUBLE -> FLOAT substitution kept
-# for Spectrum-DDL parity (reference spectrify/create.py:11-13).
+# Spark type -> external-table DDL name.  DOUBLE stays DOUBLE: the
+# reference's DOUBLE -> FLOAT substitution (spectrify/create.py:11-13)
+# relies on Redshift's FLOAT being 8-byte, but Spark SQL reads FLOAT as
+# a 4-byte float, and every scan of a DOUBLE parquet column through
+# such a table fails with PARQUET_COLUMN_DATA_TYPE_MISMATCH.
 _DDL_NAMES: dict[type, str] = {
     T.LongType: "BIGINT",
     T.IntegerType: "INTEGER",
     T.ShortType: "SMALLINT",
-    T.DoubleType: "FLOAT",
+    T.DoubleType: "DOUBLE",
     T.FloatType: "REAL",
     T.StringType: "VARCHAR(65535)",
     T.BooleanType: "BOOLEAN",

@@ -26,7 +26,10 @@ SCHEMA = T.StructType(
 def test_columns_ddl_double_to_float():
     ddl = columns_ddl(SCHEMA)
     assert "id BIGINT" in ddl
-    assert "price FLOAT" in ddl  # DOUBLE->FLOAT parity (reference create.py:11-13)
+    # Spark SQL's FLOAT is 4-byte: the reference's DOUBLE->FLOAT
+    # substitution (create.py:11-13) would make every scan of the
+    # column fail, so DOUBLE stays DOUBLE
+    assert "price DOUBLE" in ddl
     assert "amount DECIMAL(12,2)" in ddl
 
 
@@ -38,7 +41,7 @@ def test_parquet_table_ddl_golden():
     ddl = parquet_table_ddl("sales.daily", SCHEMA, "/data/spectrum/daily")
     assert ddl == (
         "CREATE TABLE IF NOT EXISTS sales_daily (\n"
-        "  id BIGINT,\n  price FLOAT,\n  name VARCHAR(65535),\n  amount DECIMAL(12,2)\n)\n"
+        "  id BIGINT,\n  price DOUBLE,\n  name VARCHAR(65535),\n  amount DECIMAL(12,2)\n)\n"
         "USING PARQUET\n"
         "LOCATION '/data/spectrum/daily'"
     )
@@ -69,6 +72,23 @@ def test_create_executes_and_is_queryable(spark, tmp_path):
         assert spark.sql("SELECT count(*) c FROM ext_t").collect()[0].c == 2
     finally:
         spark.sql("DROP TABLE IF EXISTS ext_t")
+
+
+def test_create_sums_a_double_column(spark, tmp_path):
+    """A DOUBLE parquet column registered through ``create`` scans as
+    DOUBLE: with a FLOAT column type every scan of it fails with
+    PARQUET_COLUMN_DATA_TYPE_MISMATCH."""
+    schema = T.StructType(
+        [T.StructField("k", T.LongType()), T.StructField("x", T.DoubleType())]
+    )
+    df = spark.createDataFrame([(1, 1.5), (2, 2.5), (3, 4.0)], schema)
+    path = str(tmp_path / "dbl")
+    df.write.parquet(path)
+    create(spark, parquet_table_ddl("dbl_t", schema, path))
+    try:
+        assert spark.sql("SELECT sum(x) s FROM dbl_t").collect()[0].s == 8.0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS dbl_t")
 
 
 def test_partitioned_transform_roundtrip(spark, tmp_path):

@@ -497,15 +497,17 @@ def test_reliable_checkpoint_branch_used_when_dir_set(tmp_path):
     and results are unchanged.  Runs in a subprocess: a checkpoint dir
     is sticky on the shared SparkContext and would change every later
     test's lineage-cut behavior."""
+    import os
     import subprocess
     import sys
     import textwrap
 
     ckpt = str(tmp_path / "ckpt")
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = textwrap.dedent(
         f"""
         import os, sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {repo_root!r})
         os.environ["SPARK_GRAFT_CHECKPOINT_DIR"] = {ckpt!r}
         from spectrify_spark.session import get_spark
         from spectrify_spark.operators import dedup

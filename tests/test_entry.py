@@ -1,8 +1,9 @@
 """Driver-contract smoke tests for __spark_entry__."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E
 
@@ -21,10 +22,10 @@ def test_every_query_runs_at_smallest_sf(spark, sf_dir):
         assert name in qs, f"oracle without query: {name}"
 
 
-def test_queries_have_unique_column_names(spark, sf_dir):
+def test_queries_have_unique_column_names(registry_frames, sf_dir):
     # driver sorts columns by name before hashing — duplicates would break it
-    for name, fn in E.queries().items():
-        df = fn(spark, sf_dir)
+    for name in E.queries():
+        df = registry_frames.keep(name, sf_dir)
         assert len(df.columns) == len(set(df.columns)), name
 
 

@@ -44,13 +44,13 @@ def test_every_key_has_oracle_or_unit_coverage():
 
 
 @pytest.mark.parametrize("name", _ORACLE_KEYS)
-def test_oracle_parity(spark, duck, name):
+def test_oracle_parity(registry_frames, duck, name):
     """Driver-faithful compare (r8): both result sets round-trip
     through pandas exactly like the driver's canonicalizer, including
     the meta-checks the r7 reds motivated — no array/map/struct output
     columns, no int/float dtype-kind drift (DuckDB HUGEINT -> float64),
     and a sort_values crash probe."""
-    df = _QUERIES[name](spark, SF_DIR)
+    df = registry_frames.take(name, SF_DIR)
     ores = duck.sql(_ORACLES[name])
     problems = compare_key(df, ores)
     assert not problems, f"{name}: " + "; ".join(problems)

@@ -384,37 +384,68 @@ def test_committed_unflipped_crash_never_consumes_window(spark, tmp_path):
     assert read_published(spark, root).count() == 30
 
 
-def test_legacy_pre_marker_datasets_grandfathered(spark, tmp_path):
-    """Second-review regression (r13): datasets published before the
-    commit marker existed have no markers at all — treating them as
-    crashed partials would refuse time travel on the LIVE pointed
-    version and let the first post-upgrade vacuum delete the whole
-    retained history.  A pointed-but-unmarked dataset is detected as
-    legacy; READS honor it without writing (a pure read must work on
-    read-only storage — r13 ADVICE), and the first WRITER path
-    (vacuum/publish) stamps the markers durably."""
+def _stripped_marker_dataset(spark, root: str) -> None:
+    """Two published versions (pruned-scan rollups included), then
+    every COMMITTED marker removed — the shape of a dataset written
+    before markers existed, or of out-of-band marker loss."""
+    from spectrify_spark.catalog.publish import COMMITTED
+
+    for n, tag in ((10, "a"), (20, "b")):
+        publish(_df(spark, n, tag), root, keep_versions=3,
+                stats_cols=["k"], bloom_cols=["k"])
+    for v in (1, 2):
+        os.remove(os.path.join(root, f"v={v}", COMMITTED))
+
+
+def test_stripped_markers_lose_nothing(spark, tmp_path):
+    """A dataset whose commit markers were all stripped loses no data:
+    vacuum quarantines — never removes — unmarked versions below the
+    pointer, and so does the next publish's tail vacuum; the pointer
+    path still reads, and nothing re-certifies the stripped versions."""
     from spectrify_spark.catalog.publish import COMMITTED
 
     root = str(tmp_path / "ds")
-    publish(_df(spark, 10, "a"), root, keep_versions=3)
-    publish(_df(spark, 20, "b"), root, keep_versions=3)
-    # strip the markers: the on-disk layout of a pre-marker dataset
-    for v in (1, 2):
-        os.remove(os.path.join(root, f"v={v}", COMMITTED))
-    # time travel works READ-ONLY: no marker appears from a pure read
-    assert read_published(spark, root, version=2).count() == 20
-    assert read_published(spark, root, version=1).count() == 10
-    assert not os.path.isfile(os.path.join(root, "v=1", COMMITTED))
-    assert not os.path.isfile(os.path.join(root, "v=2", COMMITTED))
-    # vacuum (a writer path) stamps the legacy window instead of
-    # wiping it
-    assert vacuum(root, keep_versions=2) == []
-    assert os.path.isfile(os.path.join(root, "v=1", COMMITTED))
-    assert read_published(spark, root, version=1).count() == 10
-    # and the next publish retains the just-superseded legacy version
-    publish(_df(spark, 30, "c"), root, keep_versions=2)
-    assert read_published(spark, root, version=2).count() == 20
+    _stripped_marker_dataset(spark, root)
+
+    def version_dirs():
+        return sorted(d for d in os.listdir(root) if d.startswith("v="))
+
+    assert read_published(spark, root).count() == 20  # pointer path
+    assert vacuum(root, keep_versions=1) == []
+    assert version_dirs() == ["v=1", "v=2"]
+    publish(_df(spark, 30, "c"), root, keep_versions=1)
+    assert version_dirs() == ["v=1", "v=2", "v=3"]
     assert read_published(spark, root).count() == 30
+    # nothing re-certified the stripped versions behind our back
+    for v in (1, 2):
+        assert not os.path.isfile(os.path.join(root, f"v={v}", COMMITTED))
+
+
+def test_stripped_markers_refuse_time_travel_until_restored(spark, tmp_path):
+    """Explicit time travel to a version without its COMMITTED marker
+    refuses on every reader — plain and both pruned scans — and
+    restoring the (content-free) marker re-opens it."""
+    from spectrify_spark.catalog.publish import (
+        COMMITTED,
+        published_pruned_scan,
+        published_pruned_scan_eq,
+    )
+
+    root = str(tmp_path / "ds")
+    _stripped_marker_dataset(spark, root)
+    for v in (1, 2):
+        for fn in (
+            lambda: read_published(spark, root, version=v),
+            lambda: published_pruned_scan(spark, root, "k", 0, 5, version=v),
+            lambda: published_pruned_scan_eq(spark, root, "k", 3, version=v),
+        ):
+            with pytest.raises(FileNotFoundError, match="never\\s+committed"):
+                fn()
+
+    open(os.path.join(root, "v=1", COMMITTED), "w").close()
+    assert read_published(spark, root, version=1).count() == 10
+    with pytest.raises(FileNotFoundError, match="never\\s+committed"):
+        read_published(spark, root, version=2)
 
 
 def test_publish_salvaging_a_crashed_partial_keeps_its_source(spark, tmp_path):
@@ -513,27 +544,6 @@ def test_pruned_scan_time_travel_refuses_crashed_partial(spark, tmp_path):
     assert published_pruned_scan(spark, root, "k", 0, 10).count() == 10
 
 
-def test_pruned_scan_time_travel_on_legacy_dataset_is_read_only(spark, tmp_path):
-    """Legacy (pre-marker) datasets: explicit-version pruned scans must
-    honor the pointed-but-unmarked grandfathering WITHOUT writing
-    markers — a pure read must work on read-only storage."""
-    from spectrify_spark.catalog.publish import (
-        COMMITTED,
-        published_pruned_scan,
-        published_pruned_scan_eq,
-    )
-
-    root = str(tmp_path / "ds")
-    publish(_df(spark, 100, "a"), root, stats_cols=["k"], bloom_cols=["k"])
-    publish(_df(spark, 200, "b"), root, stats_cols=["k"], bloom_cols=["k"])
-    for v in (1, 2):
-        os.remove(os.path.join(root, f"v={v}", COMMITTED))
-    assert published_pruned_scan(spark, root, "k", 0, 10, version=1).count() == 10
-    assert published_pruned_scan_eq(spark, root, "k", 5, version=2).count() == 1
-    for v in (1, 2):
-        assert not os.path.isfile(os.path.join(root, f"v={v}", COMMITTED))
-
-
 def test_publish_dir_reader_safe_index_rebuild(spark, tmp_path):
     """publish_dir (r14): materialized-index REBUILDS through the
     versioned publish are reader-safe — write_ivfpq_index targets a
@@ -608,17 +618,13 @@ def test_publish_dir_reader_safe_index_rebuild(spark, tmp_path):
     assert current_version(root) == 3
 
 
-def test_marker_loss_is_not_legacy(spark, tmp_path, caplog):
-    """r14 ADVICE hardening: legacy status requires NO marker anywhere.
-    A dataset where some versions carry markers but the pointed one
-    does not can only mean out-of-band marker loss — granting legacy
-    status there would make every crashed partial at or below the
-    pointer readable via explicit time travel, and the writer-path
-    migration would re-certify them sight-unseen.  Both paths must
-    refuse: reads raise, the migration warns and stamps nothing.
-    Recovery = restoring the COMMITTED sentinel (it is content-free)."""
-    import logging
-
+def test_marker_loss_is_not_legacy(spark, tmp_path):
+    """A dataset where some versions carry markers but the pointed one
+    does not can only mean out-of-band marker loss — treating the
+    unmarked version as committed would make every crashed partial at
+    or below the pointer readable via explicit time travel.  Reads
+    refuse it and no writer path re-certifies it.  Recovery =
+    restoring the COMMITTED file (it is content-free)."""
     from spectrify_spark.catalog.publish import (
         COMMITTED,
         published_pruned_scan,
@@ -647,12 +653,8 @@ def test_marker_loss_is_not_legacy(spark, tmp_path, caplog):
     assert read_published(spark, root, version=1).count() == 10
     assert read_published(spark, root).count() == 20  # pointer path
 
-    # writer path: vacuum's migration warns and does NOT stamp
-    with caplog.at_level(
-        logging.WARNING, logger="spectrify_spark.catalog.publish"
-    ):
-        vacuum(root, keep_versions=3)
-    assert any("marker loss" in r.message for r in caplog.records)
+    # writer path: vacuum does NOT stamp
+    vacuum(root, keep_versions=3)
     assert not os.path.isfile(os.path.join(root, "v=2", COMMITTED))
     # the pointed dir itself is never vacuumed (the {cur} keep-slot)
     assert read_published(spark, root).count() == 20
@@ -884,50 +886,6 @@ def test_snapshot_cli(spark, tmp_path, capsys):
     assert m2["components"]["docs"]["root"].rstrip("/") == at_root
     assert m2["components"]["docs"]["version"] == 1
     assert "pinning" not in capsys.readouterr().err
-
-
-def test_legacy_migration_crash_resumes_and_never_bricks(spark, tmp_path):
-    """r15 self-review (top finding): a crash mid legacy-marker
-    migration leaves SOME markers — the exact shape the
-    no-marker-anywhere rule reads as marker loss — which would have
-    stranded the remaining legacy versions refused forever (and
-    vacuum-deleted).  The migration now writes an intent sentinel
-    before the first stamp and removes it after the last: a crashed
-    migration (a) keeps READ-side legacy status via the sentinel and
-    (b) RESUMES stamping on the next writer op."""
-    from spectrify_spark.catalog.publish import (
-        COMMITTED,
-        MIGRATION_SENTINEL,
-        _mark_committed,
-        _write_migration_sentinel,
-    )
-
-    root = str(tmp_path / "ds")
-    for tag, n in (("a", 10), ("b", 20), ("c", 30)):
-        publish(_df(spark, n, tag), root, keep_versions=5)
-    # strip to the legacy (pre-marker) shape
-    for v in (1, 2, 3):
-        os.remove(os.path.join(root, f"v={v}", COMMITTED))
-    # simulate the crash: sentinel written, ONLY v=1 stamped
-    _write_migration_sentinel(root)
-    _mark_committed(None, root, 1)
-
-    # reads: all legacy versions stay readable through the sentinel
-    for v, n in ((1, 10), (2, 20), (3, 30)):
-        assert read_published(spark, root, version=v).count() == n
-
-    # next writer op resumes the migration instead of refusing
-    assert vacuum(root, keep_versions=5) == []
-    for v in (1, 2, 3):
-        assert os.path.isfile(os.path.join(root, f"v={v}", COMMITTED)), v
-    assert not os.path.isfile(os.path.join(root, MIGRATION_SENTINEL))
-    assert read_published(spark, root, version=2).count() == 20
-
-    # a stale sentinel on a fully-migrated dataset is swept on the
-    # next writer op (crash between last stamp and sentinel removal)
-    _write_migration_sentinel(root)
-    vacuum(root, keep_versions=5)
-    assert not os.path.isfile(os.path.join(root, MIGRATION_SENTINEL))
 
 
 def test_vacuum_quarantines_marker_loss_victims(spark, tmp_path, caplog):

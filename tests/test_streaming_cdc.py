@@ -1,5 +1,6 @@
 """Streaming CDC apply (streaming/cdc.py): a change stream folds into a
-live parquet snapshot that equals the same changes applied batch-wise."""
+published parquet snapshot that equals the same changes applied
+batch-wise, and a crash at the commit step loses nothing."""
 
 from __future__ import annotations
 
@@ -50,71 +51,95 @@ def _expected(spark):
     return {(r["k"], r["v"]) for r in base.collect()}
 
 
-def test_stream_apply_changes_equals_batch_merge(spark, tmp_path):
-    log = str(tmp_path / "changelog")
-    snap = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    _stage_log(spark, log)
-
+def _published_stream(spark, log: str, root: str, ckpt: str, **kw):
     stream = (
         spark.readStream.schema(CHANGE_SCHEMA)
         .option("maxFilesPerTrigger", "1")
         .parquet(log + "/*")
     )
-    q = cdc.stream_apply_changes(
-        stream, snap, key="k", seq_col="seq", checkpoint_dir=ckpt
+    return cdc.stream_apply_changes_published(
+        stream, root, key="k", checkpoint_dir=ckpt, **kw
     )
-    q.awaitTermination(120)
 
-    assert os.path.isdir(cdc.live_snapshot_path(snap))
-    got = {
-        (r["k"], r["v"]) for r in cdc.read_snapshot(spark, snap).collect()
-    }
+
+def test_stream_apply_changes_equals_batch_merge(spark, tmp_path):
+    """The sink with its defaults (no keep window, no rollups): the
+    drained stream publishes one version per micro-batch and ends at
+    the batch merge of the same changes."""
+    from spectrify_spark.catalog.publish import current_version, read_published
+
+    log = str(tmp_path / "changelog")
+    root = str(tmp_path / "pubds")
+    _stage_log(spark, log)
+
+    q = _published_stream(spark, log, root, str(tmp_path / "ckpt"), seq_col="seq")
+    q.awaitTermination(120)
+    assert q.exception() is None
+
+    assert current_version(root) == 3
+    got = {(r["k"], r["v"]) for r in read_published(spark, root).collect()}
     assert got == _expected(spark)
     # spelled out: k3 deleted, k2 updated, k5 latest-wins within batch
     assert got == {(1, "a"), (2, "b2"), (4, "d"), (5, "e1")}
 
 
-def test_stream_apply_changes_idempotent_replay(spark, tmp_path):
-    """Re-running the drained stream with a FRESH checkpoint replays
-    every batch against the already-final snapshot — keyed MERGE makes
-    that a no-op, the effectively-once property failure recovery
-    relies on."""
+def test_stream_apply_changes_idempotent_replay(spark, tmp_path, monkeypatch):
+    """A crash after a micro-batch's version has landed (and carries its
+    commit marker) but before the pointer flips: readers keep seeing
+    the previous version, and restarting from the SAME checkpoint
+    replays the batch onto it — the next publish sweeps the unflipped
+    leftover and reuses its number — so the final snapshot equals the
+    batch merge with nothing lost or applied twice."""
+    from spectrify_spark.catalog import publish as P
+
     log = str(tmp_path / "changelog")
-    snap = str(tmp_path / "snapshot")
+    root = str(tmp_path / "pubds")
+    ckpt = str(tmp_path / "ckpt")
     _stage_log(spark, log)
 
-    for ckpt_name in ("ckpt1", "ckpt2"):
-        stream = (
-            spark.readStream.schema(CHANGE_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(log + "/*")
-        )
-        q = cdc.stream_apply_changes(
-            stream,
-            snap,
-            key="k",
-            seq_col="seq",
-            checkpoint_dir=str(tmp_path / ckpt_name),
-        )
+    flips: list[int] = []
+    real_flip = P._pointer_write
+
+    def crash_on_second_flip(spark_, root_, n):
+        flips.append(n)
+        if len(flips) == 2:
+            raise OSError("injected crash before the pointer flip")
+        real_flip(spark_, root_, n)
+
+    monkeypatch.setattr(P, "_pointer_write", crash_on_second_flip)
+
+    q = _published_stream(spark, log, root, ckpt, seq_col="seq")
+    with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(120)
-    got = {(r["k"], r["v"]) for r in cdc.read_snapshot(spark, snap).collect()}
-    assert got == {(1, "a"), (2, "b2"), (4, "d"), (5, "e1")}
+    # the second batch landed and was marked, but the pointer never moved
+    assert P.current_version(root) == 1
+    assert os.path.isfile(os.path.join(root, "v=2", P.COMMITTED))
+    got = {(r["k"], r["v"]) for r in P.read_published(spark, root).collect()}
+    assert got == {(1, "a"), (2, "b"), (3, "c")}
+
+    q = _published_stream(spark, log, root, ckpt, seq_col="seq")
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert flips == [1, 2, 2, 3]
+    assert P.current_version(root) == 3
+    got = {(r["k"], r["v"]) for r in P.read_published(spark, root).collect()}
+    assert got == _expected(spark)
 
 
 def test_stream_apply_changes_rejects_bad_op(spark, tmp_path):
+    from spectrify_spark.catalog.publish import current_version
+
     log = str(tmp_path / "changelog")
-    snap = str(tmp_path / "snapshot")
+    root = str(tmp_path / "pubds")
     df = spark.createDataFrame([(1, "a", 1, "X")], CHANGE_SCHEMA)
     df.coalesce(1).write.parquet(f"{log}/b0")
-    stream = spark.readStream.schema(CHANGE_SCHEMA).parquet(log + "/*")
-    q = cdc.stream_apply_changes(
-        stream, snap, key="k", checkpoint_dir=str(tmp_path / "ckpt")
-    )
+    q = _published_stream(spark, log, root, str(tmp_path / "ckpt"))
     with pytest.raises(Exception, match="invalid op|StreamingQueryException"):
         q.awaitTermination(120)
         if q.exception():
             raise q.exception()
+    # the failed batch published nothing
+    assert current_version(root) is None
 
 
 def test_stream_apply_changes_published_equals_batch_merge(spark, tmp_path):
@@ -136,17 +161,12 @@ def test_stream_apply_changes_published_equals_batch_merge(spark, tmp_path):
     root = str(tmp_path / "pubds")
     _stage_log(spark, log)
 
-    stream = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(log + "/*")
-    )
-    q = cdc.stream_apply_changes_published(
-        stream,
+    q = _published_stream(
+        spark,
+        log,
         root,
-        key="k",
+        str(tmp_path / "ckpt"),
         seq_col="seq",
-        checkpoint_dir=str(tmp_path / "ckpt"),
         keep_versions=2,
         stats_cols=["k"],
         bloom_cols=["k"],
@@ -173,18 +193,8 @@ def test_stream_apply_changes_published_equals_batch_merge(spark, tmp_path):
 
     # replay with a fresh checkpoint: content stays identical
     # (duplicate versions are reader-invisible and age out)
-    stream2 = (
-        spark.readStream.schema(CHANGE_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(log + "/*")
-    )
-    q2 = cdc.stream_apply_changes_published(
-        stream2,
-        root,
-        key="k",
-        seq_col="seq",
-        checkpoint_dir=str(tmp_path / "ckpt2"),
-        keep_versions=2,
+    q2 = _published_stream(
+        spark, log, root, str(tmp_path / "ckpt2"), seq_col="seq", keep_versions=2
     )
     q2.awaitTermination(120)
     got2 = {(r["k"], r["v"]) for r in read_published(spark, root).collect()}

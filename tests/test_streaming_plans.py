@@ -123,9 +123,12 @@ _WM_TAG = re.compile(r"-T\d+ms")
 
 @pytest.fixture(scope="module")
 def audits(spark, sf_dir):
-    """Run each drain twin once; _drain_scoped records the audit."""
+    """Run each drain twin once; _drain_scoped records the audit.  Every
+    run of a twin records it, so a twin the registry sweeps already ran
+    in this session is not drained again."""
     for name in GOLDEN:
-        E.queries()[name](spark, sf_dir).collect()
+        if name not in E.STREAM_AUDITS:
+            E.queries()[name](spark, sf_dir).collect()
     return dict(E.STREAM_AUDITS)
 
 

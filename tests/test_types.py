@@ -67,8 +67,9 @@ def test_timestamp_ntz_maps_to_timestamp_ddl():
 
 
 def test_double_to_float_ddl_substitution():
-    # Spectrum-DDL parity: DOUBLE emitted as FLOAT (reference create.py:11-13)
-    assert spark_type_to_ddl(T.DoubleType()) == "FLOAT"
+    # the reference's DOUBLE -> FLOAT substitution (create.py:11-13) is
+    # NOT made: Spark SQL reads FLOAT as a 4-byte float
+    assert spark_type_to_ddl(T.DoubleType()) == "DOUBLE"
 
 
 def test_validate_schema_rejects_nested():
