@@ -250,10 +250,12 @@ def read_published_cow(
     manifest, union the referenced immutable partition directories.
     ``partitions`` restricts the scan to those partition values —
     manifest-level pruning: unreferenced partitions' files are never
-    listed, the cheapest possible partition filter.  An empty (or
-    fully pruned) dataset returns an empty frame in the recorded
-    schema."""
-    from spectrify_spark.catalog.publish import _join
+    listed, the cheapest possible partition filter.  The scan takes
+    the manifest's recorded schema (the partition value stays in the
+    rows and the ``__p`` token is never read as a column, so it is the
+    files' schema), so no footer-inference job runs.  An empty (or
+    fully pruned) dataset returns an empty frame in that schema."""
+    from spectrify_spark.catalog.publish import _join, _scan
     from pyspark.sql.types import StructType
 
     m = _read_manifest(spark, root, version=version)
@@ -262,15 +264,15 @@ def read_published_cow(
         want = {_enc_part(v) for v in partitions}
         parts = {e: vd for e, vd in parts.items() if e in want}
     dirs = [_join(root, f"{vd}/__p={e}") for e, vd in sorted(parts.items())]
+    schema = StructType.fromJson(m["schema"]) if m["schema"] else None
     if not dirs:
-        schema = StructType.fromJson(m["schema"]) if m["schema"] else None
         if schema is None:
             raise FileNotFoundError(
                 f"read_published_cow: {root!r} is empty and carries no "
                 "schema"
             )
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(*dirs)
+    return _scan(spark, schema, *dirs)
 
 
 def cow_partitions(spark, root: str, version: "int | None" = None) -> list:

@@ -31,7 +31,12 @@ sink:
 - schema changes are refused by default (r17): additive evolution
   needs an explicit ``allow_added_columns=True``, dropped/retyped
   columns always need a fresh root — :class:`SchemaEvolutionError`
-  states the full contract and the time-travel semantics.
+  states the full contract and the time-travel semantics;
+- readers take a version's schema from its commit marker, not from
+  the files (:func:`_version_schema`): the marker records the
+  DataFrame's ``schema`` and its ``partition_by`` layout, and an
+  unpartitioned version is scanned with that schema, so no read starts
+  a footer-inference job.
 
 Storage routing: every directory/pointer/vacuum operation goes
 through the same Hadoop FileSystem helper the index sidecars use
@@ -175,8 +180,9 @@ def current_version(root: str, spark=None) -> int | None:
 def _mark_committed(spark, root: str, n: int, extra: "dict | None" = None) -> None:
     """Land the per-version commit marker (the last write before the
     pointer flip — see :data:`COMMITTED`).  ``extra`` rides the marker
-    payload (r17: :func:`publish` records the version's SCHEMA here so
-    the evolution contract can compare without a footer read)."""
+    payload (:func:`publish` records the version's ``schema`` and
+    ``partition_by`` here, for the evolution check and for readers —
+    see :func:`_version_schema`)."""
     payload = {"version": n, **(extra or {})}
     lp = _local_path(root)
     if lp is not None:
@@ -204,6 +210,30 @@ def _read_commit_marker(root: str, n: int, spark=None) -> "dict | None":
     return read_json_sidecar(
         _require_spark(spark, root, "read"), _join(root, f"v={n}"), COMMITTED
     )
+
+
+def _version_schema(root: str, n: int, spark=None):
+    """The schema recorded in ``v=n``'s commit marker, or None when the
+    files must be inferred instead: no marker or no ``schema`` (a
+    :func:`publish_dir` payload), or a partition layout that is absent
+    (markers written before it was recorded) or non-empty (Hive
+    partition columns are appended on read, in inferred types, so the
+    DataFrame's schema is not the scan's).  Versions are immutable, so
+    the record cannot go stale."""
+    marker = _read_commit_marker(root, n, spark) or {}
+    recorded = marker.get("schema")
+    if recorded is None or marker.get("partition_by") != []:
+        return None
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(recorded)
+
+
+def _scan(spark, schema, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)``, with ``schema`` when one is known
+    (no footer-inference job)."""
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(*paths)
 
 
 def _is_committed(root: str, n: int, spark=None) -> bool:
@@ -676,9 +706,13 @@ def publish(
     pointed version's — an additive change (new columns only) needs
     an explicit ``allow_added_columns=True``, and dropped/retyped
     columns are always refused (:class:`SchemaEvolutionError` states
-    the full contract, including time-travel semantics).  Each
-    publish records its schema in the commit marker for the next
-    publish's check.
+    the full contract, including time-travel semantics).
+
+    MARKER CONTRACT: the commit marker records ``schema`` (``df.schema``
+    as JSON) and ``partition_by`` (the list passed here, ``[]`` when
+    unpartitioned).  The next publish's evolution check compares
+    against ``schema``; readers of an unpartitioned version scan with
+    it instead of inferring from footers (:func:`_version_schema`).
     """
     if keep_versions < 1:
         raise ValueError(f"keep_versions must be >= 1, got {keep_versions}")
@@ -764,7 +798,11 @@ def publish(
 
     return _publish_version(
         root, spark, land, keep_versions, keep_leftover=keep_leftover,
-        caller="publish", marker_extra={"schema": df.schema.jsonValue()},
+        caller="publish",
+        marker_extra={
+            "schema": df.schema.jsonValue(),
+            "partition_by": list(partition_by or []),
+        },
         # the evolution check runs UNDER the writer lock (r17
         # self-review): a pre-flight check could read the pointed
         # schema, lose the lock race to a publisher that evolves it,
@@ -798,6 +836,13 @@ def _publish_version(
     the directory exists, re-read the pointer (optimistic concurrency,
     below), commit-mark, flip the pointer atomically, vacuum the
     retention window.  Returns the new version number.
+
+    ``marker_extra`` rides the commit marker beside ``version``.
+    :func:`publish` passes ``schema`` and ``partition_by``, which
+    readers trust as the version's scan schema when ``partition_by`` is
+    empty (:func:`_version_schema`); a caller whose payload is not the
+    parquet of one DataFrame (:func:`publish_dir`) records neither, and
+    its readers infer.
 
     OPTIMISTIC CONCURRENCY (r15 VERDICT item 3): the single-writer
     contract is enforced, not just documented — immediately before the
@@ -952,13 +997,13 @@ def read_published(
     Resolving the pointer BEFORE the scan is what makes readers immune
     to concurrent publishes — the resolved directory is immutable.
 
-    ``schema`` (r18 opt round, the sidecar-schema idea applied to the
-    publish catalog): a caller that KNOWS the written schema — the
-    streaming sinks read back the very table they maintain — passes it
-    to skip footer schema inference, one job per read locally and a
-    listing + footer round trip on object storage.  Pass exactly the
-    schema the version was written with (column order included);
-    leave None to infer."""
+    ``schema`` defaults to the one the version's commit marker records
+    (:func:`_version_schema`), which skips footer schema inference —
+    one job per read locally and a listing + footer round trip on
+    object storage.  Partitioned versions and :func:`publish_dir`
+    payloads record none and are inferred.  A caller may pass the
+    schema itself; pass exactly the one the version was written with
+    (column order included)."""
     v = current_version(root, spark) if version is None else int(version)
     if v is None:
         raise FileNotFoundError(f"read_published: nothing published at {root!r}")
@@ -972,8 +1017,9 @@ def read_published(
             f"read_published: version {v} not found at {root!r} "
             f"(have {_versions(root, spark)}; it may have been vacuumed)"
         )
-    reader = spark.read.schema(schema) if schema is not None else spark.read
-    return reader.parquet(_join(root, f"v={v}"))
+    if schema is None:
+        schema = _version_schema(root, v, spark)
+    return _scan(spark, schema, _join(root, f"v={v}"))
 
 
 def _check_time_travel_target(fn: str, root: str, v: int, spark) -> None:
@@ -1276,6 +1322,7 @@ def published_pruned_scan(
     if version is not None:
         _check_time_travel_target("published_pruned_scan", root, v, spark)
     vdir = _join(root, f"v={v}")
+    schema = _version_schema(root, v, spark)
     rollup = read_json_sidecar(spark, vdir, VERSION_STATS)
     if rollup:
         for c, (lo, hi) in rgs.items():
@@ -1295,8 +1342,10 @@ def published_pruned_scan(
                 # through to the per-file tier
                 continue
             if disjoint:
-                return spark.read.parquet(vdir).filter(F.lit(False))
-    return pruned_scan(spark, vdir, ranges=rgs, spark_side=spark_side)
+                return _scan(spark, schema, vdir).filter(F.lit(False))
+    return pruned_scan(
+        spark, vdir, ranges=rgs, spark_side=spark_side, schema=schema
+    )
 
 
 def _write_version_bloom_rollup(spark, vdir: str, cols: list[str]) -> None:
@@ -1377,8 +1426,9 @@ def published_pruned_scan_eq(
     if version is not None:
         _check_time_travel_target("published_pruned_scan_eq", root, v, spark)
     vdir = _join(root, f"v={v}")
+    schema = _version_schema(root, v, spark)
     if value is None:
-        return spark.read.parquet(vdir).filter(F.lit(False))
+        return _scan(spark, schema, vdir).filter(F.lit(False))
     rollup = read_json_sidecar(spark, vdir, VERSION_BLOOM) or {}
     s = rollup.get(col)
     if s:
@@ -1394,8 +1444,10 @@ def published_pruned_scan_eq(
         # exists to make cheap
         bits = set(s["bits"])
         if pos is not None and any(p not in bits for p in pos):
-            return spark.read.parquet(vdir).filter(F.lit(False))
-    return pruned_scan_eq(spark, vdir, col, value, spark_side=spark_side)
+            return _scan(spark, schema, vdir).filter(F.lit(False))
+    return pruned_scan_eq(
+        spark, vdir, col, value, spark_side=spark_side, schema=schema
+    )
 
 
 # --------------------------------------------------- snapshot publish
@@ -1540,12 +1592,10 @@ def read_snapshot_manifest(
     return m
 
 
-def snapshot_component_path(
-    root: str, name: str, version: int | None = None, spark=None
-) -> str:
-    """Path of the component's PINNED version directory — hand it to
-    any path-taking reader (``spark.read.parquet``, the ANN probe
-    functions, ``layout.pruned_scan``)."""
+def _snapshot_pin(
+    root: str, name: str, version: int | None, spark
+) -> "tuple[str, int]":
+    """``(component root, pinned version)`` of ``name`` in the snapshot."""
     m = read_snapshot_manifest(root, version=version, spark=spark)
     comp = (m.get("components") or {}).get(name)
     if comp is None:
@@ -1553,16 +1603,27 @@ def snapshot_component_path(
             f"snapshot_component_path: no component {name!r} in snapshot "
             f"{root!r} (have {sorted(m.get('components') or {})})"
         )
-    return _join(comp["root"], f"v={int(comp['version'])}")
+    return comp["root"], int(comp["version"])
+
+
+def snapshot_component_path(
+    root: str, name: str, version: int | None = None, spark=None
+) -> str:
+    """Path of the component's PINNED version directory — hand it to
+    any path-taking reader (``spark.read.parquet``, the ANN probe
+    functions, ``layout.pruned_scan``)."""
+    croot, cv = _snapshot_pin(root, name, version, spark)
+    return _join(croot, f"v={cv}")
 
 
 def read_snapshot_table(
     spark, root: str, name: str, version: int | None = None
 ) -> DataFrame:
-    """Scan a parquet component through the snapshot's pin."""
-    return spark.read.parquet(
-        snapshot_component_path(root, name, version=version, spark=spark)
-    )
+    """Scan a parquet component through the snapshot's pin, with the
+    schema its commit marker records (:func:`_version_schema`)."""
+    croot, cv = _snapshot_pin(root, name, version, spark)
+    schema = _version_schema(croot, cv, spark)
+    return _scan(spark, schema, _join(croot, f"v={cv}"))
 
 
 def vacuum_pipeline(

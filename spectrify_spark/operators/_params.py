@@ -97,10 +97,22 @@ def attach_params(df: DataFrame, row: dict, schema: str) -> DataFrame:
     (guide §3: don't schedule a join to read a constant).  Values are
     bit-identical either way: Python floats ARE doubles and the cast
     only stamps the declared element types.  Oversized or
-    non-literalizable parameters keep the broadcast-frame path."""
+    non-literalizable parameters keep the broadcast-frame path.
+
+    A parameter name that ``df`` already has raises ValueError on both
+    arms (compared case-insensitively, as Spark resolves names): the
+    literal arm would silently replace the column and the broadcast
+    arm would duplicate it."""
     from pyspark.sql.types import _parse_datatype_string
 
     struct = _parse_datatype_string(schema)
+    have = {c.lower() for c in df.columns}
+    clash = [f.name for f in struct.fields if f.name.lower() in have]
+    if clash:
+        raise ValueError(
+            f"attach_params: parameter columns {clash} already exist in "
+            f"the frame ({df.columns})"
+        )
     if sum(_scalar_count(v) for v in row.values()) <= PARAM_LITERAL_MAX:
         try:
             cols = {

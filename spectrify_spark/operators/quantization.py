@@ -917,8 +917,10 @@ def _exact_l2_rerank(
     instead of forcing a corpus-wide join.  Returns ``(id, l2_dist)``
     ascending top-k, ties by id."""
     cand_ids = [r[id_col] for r in cand.collect()]
+    from spectrify_spark.operators._params import _fast_lit
+
     dim = len(query_vec)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
+    qlit = _fast_lit([float(x) for x in query_vec])
     vec = F.col(vec_col).cast("array<double>")
     guarded = F.when(F.size(vec) == dim, vec).otherwise(
         F.raise_error(
@@ -1083,7 +1085,9 @@ def sq_topk(
     read, the same asymmetric-distance idea as PQ's ADC but with
     per-dimension resolution.  Row-local fold, global ascending top-k
     (TakeOrderedAndProject), ties by id."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    from spectrify_spark.operators._params import _fast_lit
+
+    q = _fast_lit([float(x) for x in query_vec])
     dist = _l2_fold(_sq_midpoint_recon(F.col(code_col)), q)
     if round_digits is not None:
         dist = F.round(dist, round_digits)

@@ -36,7 +36,9 @@ def brute_force_topk(
     round_digits: int | None = 4,
 ) -> DataFrame:
     """Exact cosine top-k against a literal query vector."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    from spectrify_spark.operators._params import _fast_lit
+
+    q = _fast_lit([float(x) for x in query_vec])
     scored = df.select(
         F.col(id_col),
         (F.round(cosine(F.col(vec_col), q), round_digits)
@@ -238,7 +240,9 @@ def ivf_topk(
     probe_cells = [
         cid for cid, _ in sorted(centroids, key=lambda cv: -cos_py(cv[1]))[:nprobe]
     ]
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
+    from spectrify_spark.operators._params import _fast_lit
+
+    q = _fast_lit([float(x) for x in query_vec])
     return (
         assigned.filter(F.col(cell_col).isin(probe_cells))
         .select(F.col(id_col), cosine(F.col(vec_col), q).alias("cos"))

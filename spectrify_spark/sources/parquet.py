@@ -89,7 +89,7 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     return cols
 
 
-#: Inferred-schema memo: (path, root mtime_ns) -> the StructType SPARK
+#: Inferred-schema memo: (path, listing signature) -> the StructType SPARK
 #: ITSELF resolved for that table under read_table's conf window (r18
 #: opt round).  Every plain ``spark.read.parquet`` launches a 1-task
 #: footer schema-inference job even for a path read moments ago —
@@ -97,13 +97,29 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
 #: constantly, so that job repeated hundreds of times per session.
 #: The memo is pure METADATA (the first read's own inferred schema,
 #: replayed via ``.schema(...)``, exactly what a catalog/metastore
-#: supplies); values and read semantics are untouched.  Same
-#: invalidation contract as :data:`_NS_COLS_CACHE` (mtime of the table
-#: root; Spark rewrites the directory entry on overwrite).
-#: ``merge_schema=True`` reads are never memoized — footer-union
-#: inference is the entire point of that flag.
+#: supplies); values and read semantics are untouched.  The key holds
+#: every file's name, size and mtime (:func:`_listing_sig`), not just
+#: the root's mtime: an append into a ``part=…/`` subdirectory leaves
+#: the root's mtime alone.  ``merge_schema=True`` reads are never
+#: memoized — footer-union inference is the entire point of that flag.
 _SCHEMA_CACHE: dict = {}
 _SCHEMA_CACHE_MAX = 256
+
+
+def _listing_sig(path: str) -> tuple:
+    """``(relative name, size, mtime_ns)`` of every file under ``path``
+    (of ``path`` itself when it is a file); raises OSError when it is
+    not a local path."""
+    if not os.path.isdir(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    sig = []
+    for d, _dirs, files in os.walk(path):
+        for name in files:
+            f = os.path.join(d, name)
+            st = os.stat(f)
+            sig.append((os.path.relpath(f, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
 
 
 def _read_ltz(
@@ -122,7 +138,7 @@ def _read_ltz(
     ckey = None
     if not merge_schema:
         try:
-            ckey = (path, os.stat(path).st_mtime_ns)
+            ckey = (path, _listing_sig(path))
         except OSError:
             ckey = None
     try:

@@ -45,10 +45,7 @@ def _merge_and_publish(
     tracer) sees every micro-batch."""
     spark = changes.sparkSession
     if _pub.current_version(root, spark) is not None:
-        # the sink wrote this table, so the schema is statically known
-        # — skip footer inference (r18, one job per micro-batch
-        # read-back)
-        base = _pub.read_published(spark, root, schema=base_schema)
+        base = _pub.read_published(spark, root)
     else:
         base = spark.createDataFrame([], base_schema)
     nxt = merge_changes(base, changes, key, op_col=op_col, delete_op=delete_op)

@@ -299,7 +299,7 @@ def stream_curate_snapshot_publish(
         # derive from the WRITTEN immutable version (one parquet read,
         # no merge-plan recompute) — the pinned pair cannot diverge
         counts = (
-            read_published(spark, corpus_root, version=cv, schema=base_schema)
+            read_published(spark, corpus_root, version=cv)
             .groupBy("lang")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),

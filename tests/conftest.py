@@ -50,3 +50,24 @@ class RegistryFrames:
 @pytest.fixture(scope="session")
 def registry_frames(spark):
     return RegistryFrames(spark)
+
+
+@pytest.fixture
+def job_count(spark):
+    """``job_count(fn)`` -> ``(fn(), number of Spark jobs fn started)``,
+    counted through a job group once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn):
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job_count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

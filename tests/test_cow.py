@@ -261,3 +261,39 @@ def test_cow_update_explicit_touched_matches_discovery(spark, tmp_path):
     assert _content(read_published_cow(spark, root_b)) == {
         ("a", 1), ("b", 6), ("c", 9),
     }
+
+
+def test_read_published_cow_takes_manifest_schema(spark, tmp_path, job_count):
+    """The cow readers scan with the manifest's recorded schema: no
+    footer-inference job while the DataFrame is built, the schema
+    inference would report, and the same rows."""
+    from spectrify_spark.catalog.cow import _enc_part, cow_partition_versions
+
+    root = str(tmp_path / "cow")
+    publish_cow_update(spark, root, _rows(spark, [("a", 1), ("b", 2)]), "k")
+    publish_cow_update(spark, root, _rows(spark, [("b", 5), ("c", 3)]), "k")
+
+    df, planning_jobs = job_count(lambda: read_published_cow(spark, root))
+    assert planning_jobs == 0
+    dirs = [
+        str(tmp_path / "cow" / f"v={v}" / f"__p={_enc_part(p)}")
+        for p, v in sorted(cow_partition_versions(spark, root).items())
+    ]
+    inferred = spark.read.parquet(*dirs)
+    assert df.schema == inferred.schema
+    assert sorted(df.collect()) == sorted(inferred.collect())
+    assert sorted(df.collect()) == [("a", 1), ("b", 5), ("c", 3)]
+    pruned, planning_jobs = job_count(
+        lambda: read_published_cow(spark, root, partitions=["b"])
+    )
+    assert planning_jobs == 0 and [tuple(r) for r in pruned.collect()] == [("b", 5)]
+
+    rroot = str(tmp_path / "rollup")
+    delta = _rows(spark, [("a", 1), ("a", 4), ("b", 2)])
+    maintain_published_rollup_cow(spark, rroot, delta, ["k"], SPECS)
+    maintain_published_rollup_cow(spark, rroot, delta, ["k"], SPECS)
+    view, planning_jobs = job_count(
+        lambda: read_rollup_cow(spark, rroot, ["k"], SPECS)
+    )
+    assert planning_jobs == 0
+    assert {r.k: r.n for r in view.collect()} == {"a": 4, "b": 2}

@@ -126,3 +126,31 @@ def test_read_table_merge_schema_evolution(spark, tmp_path):
     rows = {r.id: r for r in df.collect()}
     assert rows[1].score is None and rows[2].score == 9.5
     assert rows[1].name == "a" and rows[2].name == "b"
+
+
+def test_read_table_schema_memo_sees_partition_subdir_append(spark, tmp_path):
+    """An append into an existing ``part=…/`` subdirectory leaves the
+    table root's mtime alone; the schema memo must still see the new
+    column.  Inference without merge_schema reads the first data file
+    by path, so the appended file is named to sort first."""
+    import os
+
+    import pyarrow as pa
+
+    from spectrify_spark.sources.parquet import read_table
+
+    root = tmp_path / "t"
+    (root / "part=1").mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1, 2]}), str(root / "part=1" / "b.parquet"))
+    assert read_table(spark, str(root)).columns == ["a", "part"]
+    root_mtime = os.stat(root).st_mtime_ns
+
+    pq.write_table(
+        pa.table({"a": [3], "extra": ["x"]}), str(root / "part=1" / "a.parquet")
+    )
+    assert os.stat(root).st_mtime_ns == root_mtime
+    df = read_table(spark, str(root))
+    assert df.columns == ["a", "extra", "part"]
+    assert sorted((r.a, r.extra) for r in df.collect()) == [
+        (1, None), (2, None), (3, "x")
+    ]

@@ -1390,3 +1390,132 @@ def test_publish_lock_dead_holder_immediate_takeover(spark, tmp_path, caplog):
     with pytest.raises(TimeoutError):
         _acquire_publish_lock(root, wait=0.2)
     os.remove(lock)
+
+
+# ------------------------------------- read schema from the commit marker
+
+
+def test_published_reads_start_no_inference_job(spark, tmp_path, job_count):
+    """Every published reader of an unpartitioned version scans with the
+    schema its commit marker records: building the DataFrame starts no
+    job (a footer-inference job is the only one a parquet reader runs
+    before its action), and collecting runs only the scan's own job."""
+    from spectrify_spark.catalog.publish import (
+        current_path,
+        published_pruned_scan,
+        published_pruned_scan_eq,
+        publish_snapshot,
+        read_snapshot_table,
+    )
+
+    root = str(tmp_path / "ds")
+    publish(_df(spark, 50, "a"), root, stats_cols=["k"], bloom_cols=["k"])
+    # the counter sees an inference job when one runs
+    assert job_count(lambda: spark.read.parquet(current_path(root)))[1] == 1
+    publish_snapshot(str(tmp_path / "snap"), {"docs": root})
+
+    readers = {
+        "read_published": (lambda: read_published(spark, root), 50),
+        "pruned_scan": (
+            lambda: published_pruned_scan(spark, root, "k", 10, 20), 10
+        ),
+        "pruned_scan_disjoint": (
+            lambda: published_pruned_scan(spark, root, "k", 500, 600), 0
+        ),
+        "pruned_scan_eq": (
+            lambda: published_pruned_scan_eq(spark, root, "k", 7), 1
+        ),
+        "pruned_scan_eq_absent": (
+            lambda: published_pruned_scan_eq(spark, root, "k", 10**9), 0
+        ),
+        "pruned_scan_eq_null": (
+            lambda: published_pruned_scan_eq(spark, root, "k", None), 0
+        ),
+        "read_snapshot_table": (
+            lambda: read_snapshot_table(spark, str(tmp_path / "snap"), "docs"),
+            50,
+        ),
+    }
+    for name, (reader, n_rows) in readers.items():
+        df, planning_jobs = job_count(reader)
+        assert planning_jobs == 0, name
+        assert df.columns == ["k", "tag"], name
+        rows, scan_jobs = job_count(df.collect)
+        assert len(rows) == n_rows, name
+        assert scan_jobs <= 1 and (scan_jobs == 1 or n_rows == 0), name
+
+
+def test_recorded_schema_round_trips_every_type_family(spark, tmp_path):
+    """The marker's schema is the schema inference would report, for
+    every type family the lake maps, and the rows read through it are
+    the rows inference reads."""
+    import datetime
+    import decimal
+
+    from spectrify_spark.catalog.publish import _version_schema, current_path
+
+    ddl = (
+        "i16 smallint, i32 int, i64 bigint not null, f32 float, "
+        "f64 double, d38 decimal(38,6), d18 decimal(18,2), b boolean, "
+        "s string, dt date, ts timestamp, ntz timestamp_ntz, "
+        "arr array<int>, st struct<a:int,b:string>, m map<string,bigint>, "
+        "nested array<struct<x:double,y:array<string>>>"
+    )
+    ts = datetime.datetime(2020, 1, 2, 3, 4, 5, 678901)
+    rows = [
+        (
+            -3, 2**31 - 1, 2**62, 1.5, -2.25,
+            decimal.Decimal("12345678901234567890123456789012.123456"),
+            decimal.Decimal("-2.50"), True, "ü", datetime.date(1999, 12, 31),
+            ts, ts, [1, None], (1, "a"), {"k": 1}, [(0.5, ["p", None])],
+        ),
+        (None, None, 0) + (None,) * 13,
+    ]
+    root = str(tmp_path / "ds")
+    publish(spark.createDataFrame(rows, ddl), root)
+    assert _version_schema(root, 1) is not None
+    got = read_published(spark, root)
+    inferred = spark.read.parquet(current_path(root))
+    assert got.schema == inferred.schema
+    assert sorted(got.collect(), key=lambda r: r.i64) == sorted(
+        inferred.collect(), key=lambda r: r.i64
+    )
+
+
+def test_unrecorded_layouts_fall_back_to_inference(spark, tmp_path, job_count):
+    """A partitioned publish, a publish_dir payload and a marker written
+    before the partition layout was recorded carry no usable scan
+    schema: readers infer, with the columns and order they always had."""
+    from spectrify_spark.catalog.publish import (
+        COMMITTED,
+        _version_schema,
+        current_path,
+        publish_dir,
+    )
+
+    part = str(tmp_path / "part")
+    publish(_df(spark, 6, "a").withColumn("p", F.col("k") % 2), part,
+            partition_by=["p"])
+    with open(os.path.join(part, "v=1", COMMITTED)) as fh:
+        assert json.load(fh)["partition_by"] == ["p"]
+
+    payload = str(tmp_path / "payload")
+    publish_dir(payload, lambda d: _df(spark, 6, "b").write.parquet(d))
+
+    old = str(tmp_path / "old")
+    publish(_df(spark, 6, "c"), old)
+    mpath = os.path.join(old, "v=1", COMMITTED)
+    with open(mpath) as fh:
+        marker = json.load(fh)
+    assert marker["partition_by"] == []
+    del marker["partition_by"]
+    with open(mpath, "w") as fh:
+        json.dump(marker, fh)
+
+    for root in (part, payload, old):
+        assert _version_schema(root, 1) is None, root
+        df, planning_jobs = job_count(lambda: read_published(spark, root))
+        assert planning_jobs == 1, root
+        assert df.columns == spark.read.parquet(current_path(root)).columns
+        assert df.count() == 6
+    assert read_published(spark, part).columns == ["k", "tag", "p"]

@@ -493,6 +493,26 @@ def test_attach_params_fallback_matches_literal_path(spark, monkeypatch):
     assert "BroadcastExchange" in plan
 
 
+def test_attach_params_literal_boundary_and_name_collision(spark):
+    """Exactly PARAM_LITERAL_MAX scalars fold in as a literal column; one
+    more takes the broadcast arm.  Both arms assign the same cells, and
+    both refuse a parameter name the frame already has (compared
+    case-insensitively) instead of replacing or duplicating it."""
+    import pytest
+
+    from spectrify_spark.operators._params import PARAM_LITERAL_MAX, attach_params
+
+    df = spark.range(2).withColumnRenamed("id", "P")
+    for n, arm in ((PARAM_LITERAL_MAX, False), (PARAM_LITERAL_MAX + 1, True)):
+        vals = [float(i) for i in range(n)]
+        out = attach_params(df, {"w": vals}, "w array<double>")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("BroadcastExchange" in plan) is arm, n
+        assert [r.w for r in out.collect()] == [vals, vals]
+        with pytest.raises(ValueError, match="already exist"):
+            attach_params(df, {"w": vals, "p": 1.0}, "w array<double>, p double")
+
+
 def test_fast_literal_bit_identical_to_per_element_lit(spark):
     """r18: parameter literals are built as ONE parsed SQL expression
     (per-element F.lit cost ~0.9s of py4j driver time per codebook).

@@ -36,11 +36,12 @@ import json
 import random
 import sys
 import time
+from pathlib import Path
 
 
 def scale_mode(argv: list[str]) -> None:
     """K-replica scaling: rounds flat, wall ~linear in edge count."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import tempfile
 
     from spectrify_spark.session import get_spark
@@ -82,7 +83,7 @@ def main() -> None:
         scale_mode(sys.argv[2:])
         return
     dias = [int(a) for a in sys.argv[1:]] or [1024, 4096]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from spectrify_spark.session import get_spark
     from spectrify_spark.operators.dedup import (
         connected_components as prop_cc,

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -70,7 +71,7 @@ def timed(fn) -> float:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from spectrify_spark.operators.graph import hits, pagerank
     from spectrify_spark.session import get_spark
 

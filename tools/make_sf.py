@@ -25,6 +25,7 @@ make_edges)
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -113,7 +114,7 @@ def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--edges"]
     with_edges = "--edges" in sys.argv[1:]
     src, dst, k = args[0], args[1], int(args[2])
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from spectrify_spark.session import get_spark
 
     spark = get_spark("make-sf")

@@ -22,13 +22,14 @@ import json
 import statistics
 import sys
 import time
+from pathlib import Path
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--pythonpath", default="/root/repo")
+    ap.add_argument("--pythonpath", default=str(Path(__file__).resolve().parents[1]))
     ap.add_argument("--tag", default="")
     ap.add_argument("keys", nargs="+")
     args = ap.parse_args()

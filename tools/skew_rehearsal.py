@@ -33,6 +33,7 @@ import json
 import sys
 import tempfile
 import time
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
@@ -173,7 +174,7 @@ def run_join(spark, work: str, salted: bool, skew_aqe: bool) -> dict:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from spectrify_spark.session import get_spark
 
     src_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
