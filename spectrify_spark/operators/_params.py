@@ -38,14 +38,17 @@ def _scalar_count(v) -> int:
 
 
 def _sql_literal(v) -> str:
-    """``v`` (nested lists of finite floats/ints/bools/strings) as ONE
+    """``v`` (nested lists of finite floats/ints/bools) as ONE
     Spark SQL expression string.  ``F.lit`` on a nested list issues one
     py4j round trip PER ELEMENT — measured 0.89 s of pure driver time
     per 4x16x16 codebook build vs 4 ms for the parsed string, with
     bit-identical values (repr() emits the shortest round-trip decimal,
     which the SQL double literal parses back exactly; pinned by test).
     Raises ValueError on non-finite floats or unsupported leaves — the
-    caller falls back to the per-element ``F.lit`` path."""
+    caller falls back to the per-element ``F.lit`` path.  Strings are
+    unsupported: how the parser reads a quoted literal's backslashes
+    depends on ``spark.sql.parser.escapedStringLiterals``, while
+    ``F.lit`` carries the exact value under any setting."""
     if isinstance(v, (list, tuple)):
         return "array(" + ",".join(_sql_literal(x) for x in v) + ")"
     if isinstance(v, bool):
@@ -57,8 +60,6 @@ def _sql_literal(v) -> str:
         return r + "D"
     if isinstance(v, int):
         return f"{v}L"
-    if isinstance(v, str):
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     raise ValueError(f"unsupported literal leaf {type(v).__name__}")
 
 

@@ -74,8 +74,11 @@ def convert_manifest(
     Parallelism is Spark's task-per-file scheduling (the reference used
     a process pool with chunksize=1 — reference convert.py:222,233);
     gzip shards stay one-task-per-file in both engines.
+
+    The returned frame reads the written parquet with the written
+    frame's schema, so building it starts no footer-inference job.
     """
     paths = manifest_mod.read_manifest(manifest_path)
     df = csv_src.read_unload_csv(spark, paths, schema)
     parquet_sink.write_parquet(df, parquet_path, compression=compression)
-    return spark.read.parquet(parquet_path)
+    return spark.read.schema(df.schema).parquet(parquet_path)

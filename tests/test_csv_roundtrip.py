@@ -78,6 +78,60 @@ def test_convert_manifest_end_to_end(spark, typed_df, tmp_path):
     assert _sorted_rows(out) == _sorted_rows(typed_df)
 
 
+def test_convert_manifest_reads_back_without_inference(spark, tmp_path, job_count):
+    """The converted frame reads the parquet with the written frame's
+    schema: convert_manifest starts only the jobs of its own CSV read
+    and parquet write (building the returned frame starts none), and
+    the frame's column types and rows equal an inferring read of the
+    same parquet, for every type family the lake maps."""
+    import decimal
+
+    from spectrify_spark.sources import parquet as parquet_sink
+
+    schema = T.StructType(
+        [
+            T.StructField("i16", T.ShortType()),
+            T.StructField("i32", T.IntegerType()),
+            T.StructField("i64", T.LongType()),
+            T.StructField("f32", T.FloatType()),
+            T.StructField("f64", T.DoubleType()),
+            T.StructField("d38", T.DecimalType(38, 6)),
+            T.StructField("amt", T.DecimalType(18, 2)),
+            T.StructField("flag", T.BooleanType()),
+            T.StructField("code", T.StringType()),
+            T.StructField("dt", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (
+            -7, 2**31 - 1, -(2**62), 1.5, -2.25e9,
+            decimal.Decimal("-12345678901234567890123456789012.123456"),
+            decimal.Decimal("99.05"), True, "ü|x",
+            datetime.date(2022, 3, 1), datetime.datetime(2022, 3, 1, 4, 5, 6, 789000),
+        ),
+        (None,) * 11,
+    ]
+    csv_dir = str(tmp_path / "csv")
+    manifest = export_to_csv(spark.createDataFrame(rows, schema), csv_dir)
+
+    def write_only():
+        df = read_unload_csv(spark, read_manifest(manifest), schema)
+        parquet_sink.write_parquet(df, str(tmp_path / "pq_ref"))
+
+    _, write_jobs = job_count(write_only)
+    pq_dir = str(tmp_path / "pq")
+    out, convert_jobs = job_count(
+        lambda: convert_manifest(spark, manifest, schema, pq_dir)
+    )
+    assert convert_jobs == write_jobs
+    inferred = spark.read.parquet(pq_dir)
+    assert out.dtypes == inferred.dtypes
+    assert sorted(map(tuple, out.collect()), key=repr) == sorted(
+        map(tuple, inferred.collect()), key=repr
+    )
+
+
 def test_bool_tf_strict_raises(spark):
     df = spark.createDataFrame([Row(b="t"), Row(b="x")])
     strict = df.select(parse_bool_tf(F.col("b")).alias("b"))

@@ -623,19 +623,28 @@ def test_file_bloom_double_and_boolean_probes(spark, tmp_path):
     assert pruned_scan_eq(spark, path, "price", 1.23).count() == 0
 
 
-def test_bloom_key_jvm_python_twins_all_dtypes(spark):
+def test_bloom_key_jvm_python_twins_all_dtypes(spark, tmp_path):
     """The no-false-negative guarantee reduces to ONE invariant: for
     every supported dtype, the Python probe key (`_bloom_key_py`) is
     bit-equal to the JVM build key (`_bloom_key_col`) of the same
-    value.  Checked value-by-value across int/bigint/decimal/string/
-    date/timestamp/float/double/boolean — any drift here is a silent
-    wrong-results bug, not a perf issue."""
+    value, and the bits `write_file_bloom` stores for it are the
+    positions `_bloom_positions_py` computes.  Checked value-by-value
+    across int/bigint/decimal/string/date/timestamp/float/double/
+    boolean — any drift here is a silent wrong-results bug, not a perf
+    issue."""
     import datetime
     from decimal import Decimal
 
     from pyspark.sql import functions as F
 
-    from spectrify_spark.operators.layout import _bloom_key_col, _bloom_key_py
+    from spectrify_spark.operators.layout import (
+        FILE_BLOOM_DIR,
+        _bloom_key_col,
+        _bloom_key_py,
+        _bloom_positions_py,
+        _read_stats_rows,
+        write_file_bloom,
+    )
 
     df = spark.createDataFrame(
         [
@@ -688,6 +697,50 @@ def test_bloom_key_jvm_python_twins_all_dtypes(spark):
     for c, probe in probes.items():
         got = _bloom_key_py(probe, dtypes[c])
         assert got == row[c], (c, got, row[c])
+
+    # the positions: one build over every column at once (one file, one
+    # row), each column's stored bits equal to the Python twin's
+    path = str(tmp_path / "twins")
+    df.coalesce(1).write.parquet(path)
+    write_file_bloom(spark, path, list(probes), schema=df.schema)
+    stored = {
+        r["col"]: r for r in _read_stats_rows(spark, f"{path}/{FILE_BLOOM_DIR}")
+    }
+    assert set(stored) == set(probes)
+    for c, probe in probes.items():
+        r = stored[c]
+        assert r["dtype"] == dtypes[c], c
+        want = _bloom_positions_py(probe, r["m_bits"], r["k_hashes"], r["dtype"])
+        assert list(r["bits"]) == sorted(set(want)), c
+
+
+def test_index_builds_run_two_jobs_each(spark, tmp_path, job_count):
+    """Each index build is one scan, one shuffle and one write: with the
+    dataset's schema passed (no footer inference), `write_file_stats`
+    and `write_file_bloom` start exactly 2 Spark jobs each, for a full
+    build over several columns and for an append of a new file."""
+    from pyspark.sql import functions as F
+
+    from spectrify_spark.operators.layout import write_file_bloom, write_file_stats
+
+    path = str(tmp_path / "ds")
+    df = spark.range(400).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 13).cast("string").alias("s"),
+        (F.col("id") / 7).alias("x"),
+    )
+    df.repartition(4, "k").write.parquet(path)
+    cols = ["k", "s", "x"]
+    n, jobs = job_count(lambda: write_file_stats(spark, path, cols, schema=df.schema))
+    assert (n, jobs) == (4, 2)
+    n, jobs = job_count(lambda: write_file_bloom(spark, path, cols, schema=df.schema))
+    assert (n, jobs) == (4, 2)
+    df.limit(5).coalesce(1).write.mode("append").parquet(path)
+    for build in (write_file_stats, write_file_bloom):
+        n, jobs = job_count(
+            lambda: build(spark, path, cols, append=True, schema=df.schema)
+        )
+        assert (n, jobs) == (1, 2), build.__name__
 
 
 def test_file_bloom_decimal_probe_no_false_negative(spark, tmp_path):

@@ -1445,6 +1445,20 @@ def test_published_reads_start_no_inference_job(spark, tmp_path, job_count):
         assert scan_jobs <= 1 and (scan_jobs == 1 or n_rows == 0), name
 
 
+def test_indexed_publish_adds_four_jobs(spark, tmp_path, job_count):
+    """The skipping indexes of a published version cost two jobs each
+    (one scan, one shuffle, one write): an indexed publish starts the
+    jobs of the same publish without indexes plus 4."""
+    df = _df(spark, 200, "a").repartition(3, "k")
+    _, land = job_count(lambda: publish(df, str(tmp_path / "plain")))
+    _, indexed = job_count(
+        lambda: publish(
+            df, str(tmp_path / "indexed"), stats_cols=["k"], bloom_cols=["k", "tag"]
+        )
+    )
+    assert indexed == land + 4
+
+
 def test_recorded_schema_round_trips_every_type_family(spark, tmp_path):
     """The marker's schema is the schema inference would report, for
     every type family the lake maps, and the rows read through it are

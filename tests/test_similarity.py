@@ -547,3 +547,32 @@ def test_fast_literal_bit_identical_to_per_element_lit(spark):
     nf = [float("inf"), float("-inf"), 1.0]
     gnf = spark.range(1).select(_fast_lit(nf).alias("a")).collect()[0]["a"]
     assert gnf[0] == float("inf") and gnf[1] == float("-inf") and gnf[2] == 1.0
+
+
+def test_fast_literal_strings_exact_under_escaped_string_literals(spark):
+    """String leaves never go through the SQL parser: with
+    ``spark.sql.parser.escapedStringLiterals=true`` a quoted literal
+    keeps its backslashes verbatim, so an escaped form would parse back
+    as a different string.  `_sql_literal` refuses strings and
+    `_fast_lit` / `attach_params` fall back to `F.lit`, exact under
+    either setting."""
+    import pytest
+
+    from spectrify_spark.operators._params import _fast_lit, _sql_literal, attach_params
+
+    with pytest.raises(ValueError):
+        _sql_literal(["a", "b"])
+    s = ["it's", "a\\b", "c\\'d", "\\", "plain"]
+    conf = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(conf)
+    try:
+        for setting in ("true", "false"):
+            spark.conf.set(conf, setting)
+            got = spark.range(1).select(_fast_lit(s).alias("a")).collect()[0]["a"]
+            assert list(got) == s, setting
+            row = attach_params(
+                spark.range(1), {"w": s, "t": "x\\y"}, "w array<string>, t string"
+            ).collect()[0]
+            assert (list(row.w), row.t) == (s, "x\\y"), setting
+    finally:
+        spark.conf.set(conf, prev)
