@@ -1924,8 +1924,8 @@ def q_incr_cow(spark, sf):
     carries every other partition over BY REFERENCE to the prior
     version's immutable files (the Iceberg/Delta idea at partition
     granularity, landed through the existing pointer-flip protocol;
-    retention via vacuum_cow = the pin-aware vacuum with the
-    referenced-version set as protect).  Here: refresh 1 loads all
+    retention via the one vacuum, which keeps every version a
+    retained manifest references).  Here: refresh 1 loads all
     orders EXCEPT the even-keyed '1-URGENT' ones (touches all 5
     priority partitions), refresh 2 adds exactly those (touches ONE);
     the final rollup must hash-match the oracle's one-shot recompute

@@ -3,84 +3,49 @@
 ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
+    python bench.py                          # full run, writes BENCH_RESULT.json
+    python bench.py --keys q_a q_b           # a subset; writes nothing
+    python bench.py --keys q_a q_b --phases  # ... split by engine span
+
 Workload families:
-- HEADLINE: the flagship query set (stable across rounds — the r3/r5
-  comparison basis), each reported as the MEDIAN of 5 full executions;
-- EXTENDED: every other registry key, median of 3 — so no operator has
-  correctness rows without a perf trend;
+- HEADLINE: the flagship query set (stable across rounds), each
+  reported as the MEDIAN of 5 full executions;
+- EXTENDED: every other registry key, median of 3;
 - ``etl_convert_csv``: the reference's own core operation, gzip-CSV ->
-  typed -> parquet conversion over a lineitem export — the stage the
-  reference implements as a per-cell Python loop and this engine runs
-  through Spark's vectorized readers/writers.
+  typed -> parquet conversion over a lineitem export.
 
-Host normalization: this host shows ±2-3x run-to-run variance across
-boots (BENCH_NOTES.md) — absolute seconds are NOT comparable across
-rounds.  Each run therefore times a fixed CALIBRATION workload (pure
-Spark, no repo code: range -> modular groupBy -> sort) in the same
-session and reports ``baseline_ratio`` = headline_total /
-calibration_sec.  Compare rounds on the ratio, not the seconds: the
-calibration denominator moves with host placement exactly as the
-numerator does.
+Host normalization: wall seconds swing 2-3x across boots of this host
+family (BENCH_NOTES.md), so each full run also times a fixed
+CALIBRATION workload (pure Spark, no repo code) and the per-job floor
+(``overhead_sec``, a 1-row count) in the same session;
+``baseline_ratio`` = headline_total / calibration_sec.
 
-Medians (not min) damp both one-time codegen JIT and transient host
-stalls without letting a single lucky run mask a regression.
+The cross-round regression gate is the per-key Spark JOB COUNT (a job
+group per key, counted by the status tracker), which does not move
+with the host: the record carries ``jobs_total`` with
+``jobs_total_prev`` from the previous BENCH_RESULT.json, and
+``queries_jobs_delta`` lists every key whose count changed.  Streaming
+keys run their micro-batches on other threads (job groups are
+thread-local), so their counts cover the driver thread only.
 
-r16 noise hardening (VERDICT r15 item 2 — the r15 record regressed
-32% normalized on unchanged code during a noisy host phase):
-- per-key JOB COUNTS (job-group statusTracker) ride the record, and
-  ``queries_normalized_per_job`` subtracts ``jobs * overhead_sec`` —
-  a multi-action key pays the flat floor once PER JOB, which is why
-  the single-subtraction column under-corrected q_merge_upsert;
-- per-key SPREAD (max-min across the N runs) quantifies within-boot
-  noise key-by-key;
-- a NOISE SENTINEL fires when overhead_sec exceeds the r7-r13 band
-  (>0.13s): the heaviest keys get one more full median-of-N and the
-  official number is the min of the two medians — a phase-window
-  stall cannot own a key's record; the verdict lands in the JSON.
+Every timed execution starts from a cleared cache
+(``spark.catalog.clearCache()``, outside the timed window): Spark's
+CacheManager matches by analyzed plan, so a key that persists an
+intermediate would otherwise time later runs warm.
 
-SENTINEL POLICY (r17, stated so the record cannot read as
-cherry-picking — r16 ADVICE): min-of-two-medians is an ASYMMETRIC
-rule — it can only lower a key's official number, never raise it (a
-slower re-run keeps the first median, as q_publish_index's r16 re-run
-did).  That bias is deliberate (the sentinel exists to strip
-phase-window stalls, which only ever ADD time) and bounded (it
-engages only for the SENTINEL_HEAVY_KEYS slowest keys, only when the
-overhead probe proves the host noisy, and both medians are preserved
-in noise_sentinel.reran).  So time-series consumers can compare like
-with like, the record carries the UNADJUSTED totals alongside the
-official ones (headline_total_unadjusted / extended_total_unadjusted
-= the same sums with every key at its FIRST median); when the
-sentinel did not fire the pairs are equal.
-
-r18 measurement-bug fix, CACHE HYGIENE (VERDICT r17 item 3 — stated
-explicitly per the round rules): several query bodies persist()
-intermediates that their returned lazy frame shares between two
-consumers (q_graph_triangles' edge set, q_dedup_simhash's
-fingerprints, q_important_parts' per-part agg, plus operator-internal
-caller-owned caches).  Spark's CacheManager matches by analyzed plan,
-so iterations 2..N of a median used to re-use iteration 1's cached
-blocks — those keys' medians measured WARM-CACHE, not cold-plan,
-performance.  The harness now calls spark.catalog.clearCache()
-before EVERY timed execution (outside the timed window), so each run
-computes from the parquet inputs.  Affected keys' official numbers
-are therefore HIGHER than their r17 records by construction — that is
-the measurement correction, not a code regression; intra-run sharing
-(two consumers inside one returned plan) is unaffected.
-
-r18 JOB-COUNT REGRESSION METRIC (VERDICT r17 item 2, additions-only):
-the per-key job count is deterministic run-to-run and immune to the
-±2-3x host phases documented in BENCH_NOTES.md, so it — not wall
-seconds — is the cross-round regression gate.  The one-line JSON now
-carries ``jobs_total`` (sum of per-key jobs over all non-error keys)
-plus ``jobs_total_prev`` from the previous committed BENCH_RESULT.json,
-and the full record adds ``queries_jobs_delta`` (every key whose job
-count changed vs that previous record, with prev/now).  Policy: a key
-whose job count RISES without a documented reason is a regression
-regardless of its wall seconds; wall totals remain advisory context.
+``--phases`` splits each key's wall time by the engine's own spans
+(:mod:`spectrify_spark.obs`): it enables Spark's event log, records
+every span opened during the runs (a ``bench/<key>`` span wraps each
+run) and folds the log over them with ``perfbench.eventlog.Fold``.
+For every span name it prints, per run, the spans opened, their wall
+seconds, the seconds no job of theirs covers (driver-only: Python,
+py4j, planning), and the jobs they ran.
 """
 
 from __future__ import annotations
 
+import argparse
+import contextlib
 import json
 import os
 import shutil
@@ -92,6 +57,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as E
+from spectrify_spark import obs
 from spectrify_spark.session import get_spark
 
 HEADLINE = [
@@ -137,22 +103,12 @@ RUNS_HEADLINE = 5
 RUNS_EXTENDED = 3
 RUNS_CALIBRATION = 5
 
-#: the r7-r13 overhead_sec band top (BENCH_NOTES): a per-job floor
-#: above this means the host is in a noisy scheduling phase — the r15
-#: record regressed 32% normalized on UNCHANGED code in exactly that
-#: state.  The sentinel (r15 VERDICT item 2) then re-measures the
-#: heaviest keys once more and takes the min-of-medians, so one bad
-#: phase window cannot own a key's official number.
-OVERHEAD_BAND_MAX = 0.13
-
-#: how many of the slowest keys the sentinel re-measures
-SENTINEL_HEAVY_KEYS = 6
-
-#: calibration workload size — ONE constant shared by _calibration and
-#: the record's calibration_rows field, so resizing the workload can
-#: never ship records that attribute the new regime to the old size
-#: (the field exists precisely to let ratio consumers segment regimes)
+#: calibration workload size — recorded as ``calibration_rows`` so
+#: ratio consumers can segment records by calibration regime
 CALIBRATION_ROWS = 150_000_000
+
+#: the record's reader keeps only the last ~2,000 characters of stdout
+STDOUT_LIMIT = 1900
 
 
 def _time_once(fn) -> float:
@@ -165,28 +121,19 @@ def _median_time(fn, runs: int) -> float:
     return statistics.median(_time_once(fn) for _ in range(runs))
 
 
-def _timed_runs(spark, group: str, fn, runs: int) -> tuple[list[float], int]:
-    """Time ``runs`` executions under a dedicated Spark job group and
-    return (times, jobs-per-run).  The job count (statusTracker over
-    the group) is what the flat per-job floor multiplies by: a
-    multi-action key like q_merge_upsert pays overhead_sec PER JOB, so
-    normalizing by one subtraction systematically under-corrects it —
-    the r15 record's biggest "regressors" were exactly the
-    highest-job-count keys (VERDICT r15 item 2a).  Streaming keys run
-    their micro-batches on other threads (job groups are thread-local),
-    so their count reflects only driver-thread jobs — documented
-    undercount, still a lower bound."""
+def _timed_runs(spark, name: str, fn, runs: int) -> tuple[list[float], int]:
+    """Time ``runs`` executions of key ``name`` under its own Spark job
+    group, each inside a ``bench/<name>`` span; returns (times,
+    jobs-per-run)."""
     sc = spark.sparkContext
+    group = f"bench:{name}"
     sc.setJobGroup(group, group)
     try:
         times = []
         for _ in range(runs):
-            # r18 cache hygiene (docstring): leaked persist() handles
-            # from a previous execution must not warm this one — every
-            # timed run computes from the parquet inputs.  The clear is
-            # OUTSIDE the timed window (driver-side, ~ms).
             spark.catalog.clearCache()
-            times.append(_time_once(fn))
+            with obs.span("bench", name):
+                times.append(_time_once(fn))
     finally:
         sc.setJobGroup("bench:idle", "between keys")
     try:
@@ -198,10 +145,7 @@ def _timed_runs(spark, group: str, fn, runs: int) -> tuple[list[float], int]:
 
 def _overhead(spark) -> float:
     """Fixed per-job cost probe: a 1-row count whose compute is ~zero,
-    so its wall time IS the scheduler/JIT/GC floor every query pays.
-    When a round's timings shift by a flat constant (not a ratio),
-    compare overhead_sec across the runs — a host scheduling phase
-    shows up here, a code regression does not."""
+    so its wall time IS the scheduler floor every job pays."""
     return _median_time(lambda: spark.range(1).count(), RUNS_CALIBRATION)
 
 
@@ -209,21 +153,7 @@ def _calibration(spark) -> float:
     """Fixed synthetic workload, zero repo code: 150M-row range ->
     modular groupBy (one shuffle) -> sort of the 1000-row result.  Its
     wall time tracks host placement/frequency, not this repo — the
-    denominator for baseline_ratio.
-
-    r14 stabilization (VERDICT r13 item 6): the original 50M-row
-    workload moved ±16% across same-HEAD runs while the headline moved
-    ±2% — at ~0.4s/run its FIXED per-job cost (see overhead_sec) was a
-    20-30% slice, so scheduler jitter dominated.  The workload is now
-    3x (150M rows), reported RAW: scale-normalizing (/3) was tried and
-    rejected — the bigger job amortizes the fixed cost to a smaller
-    fraction, so a /3 value is systematically LOWER than a true
-    50M-equivalent and silently inflates baseline_ratio ~20-30%.  The
-    raw 150M median lands in the same numeric band as the old 50M
-    values on this host family (measured r14: 0.42-0.81s vs r13's
-    0.36-0.51s), so cross-round ratio magnitudes remain comparable;
-    same-run overhead_sec is the discriminator for host-phase shifts
-    (BENCH_NOTES r14)."""
+    denominator for baseline_ratio (BENCH_NOTES r14 sized it)."""
 
     def run() -> None:
         from pyspark.sql import functions as F
@@ -239,56 +169,117 @@ def _calibration(spark) -> float:
     return _median_time(run, RUNS_CALIBRATION)
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # previous run's per-key job counts (read BEFORE this run
-    # overwrites the record) — the r18 deterministic regression gate
-    here = os.path.dirname(os.path.abspath(__file__))
-    prev_jobs: dict[str, int] = {}
+def _environment(spark) -> dict:
+    sc = spark.sparkContext
+    return {
+        "master": sc.master,
+        "defaultParallelism": sc.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "spark_version": spark.version,
+        "cores": len(os.sched_getaffinity(0)),
+    }
+
+
+def _previous_jobs(here: str) -> dict[str, int]:
+    """Per-key job counts of the committed BENCH_RESULT.json."""
     try:
         with open(os.path.join(here, "BENCH_RESULT.json")) as f:
             pj = json.load(f).get("queries_jobs")
-        if isinstance(pj, dict) and "order" not in pj:
-            prev_jobs = {k: int(v) for k, v in pj.items()}
     except Exception:  # noqa: BLE001 — first run / old record shape
-        prev_jobs = {}
-    spark = get_spark("spectrify-bench")
+        return {}
+    if isinstance(pj, dict) and "order" not in pj:
+        return {k: int(v) for k, v in pj.items()}
+    return {}
+
+
+def _print_phases(fold, runs_of: dict[str, int]) -> None:
+    """Per key, every span name under its ``bench/<key>`` spans: spans
+    opened, wall, driver-only seconds and jobs, each per run, plus jobs
+    per span (the jobs of one round of an iterative operator)."""
+    for key, runs in runs_of.items():
+        ids: set = set()
+        for root in fold.spans_named(f"bench/{key}"):
+            ids |= fold.under(root["id"])
+        if not ids:
+            continue
+        by_name: dict[str, list] = {}
+        for sid in sorted(ids):
+            by_name.setdefault(fold.spans[sid]["name"], []).append(fold.spans[sid])
+        print(f"{key} (per run, {runs} runs)")
+        print(f"  {'span':<34} {'spans':>6} {'wall_s':>8} {'driver_s':>8} "
+              f"{'jobs':>6} {'jobs/span':>9}")
+        for name, spans in by_name.items():
+            jobs = len(fold.jobs_under([sp["id"] for sp in spans]))
+            wall = sum(fold.wall_s(sp) for sp in spans)
+            driver = sum(fold.driver_s(sp) for sp in spans)
+            print(f"  {name:<34} {len(spans) / runs:>6.1f} {wall / runs:>8.3f} "
+                  f"{driver / runs:>8.3f} {jobs / runs:>6.1f} "
+                  f"{jobs / len(spans):>9.1f}")
+
+
+def main(argv=None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument(
+        "--keys", nargs="+", metavar="KEY",
+        help="run only these registry keys and write no BENCH_RESULT.json",
+    )
+    ap.add_argument(
+        "--phases", action="store_true",
+        help="split each key's runs by engine span (wall, driver-only "
+        "seconds, jobs) from Spark's event log; writes no BENCH_RESULT.json",
+    )
+    args = ap.parse_args(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    here = os.path.dirname(os.path.abspath(__file__))
     qs = E.queries()
-    extended = [k for k in qs if k not in HEADLINE]
+    unknown = [k for k in args.keys or () if k not in qs]
+    if unknown:
+        ap.error(f"unknown keys: {' '.join(unknown)}")
+    full = not (args.keys or args.phases)
+    # read BEFORE this run overwrites the record
+    prev_jobs = _previous_jobs(here) if full else {}
+    keys = args.keys or HEADLINE + [k for k in qs if k not in HEADLINE]
+
+    trace_dir = tempfile.mkdtemp(prefix="bench_eventlog_") if args.phases else None
+    spark = get_spark(
+        "spectrify-bench",
+        extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": trace_dir,
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.rolling.enabled": "false",
+        } if trace_dir else None,
+    )
+    env = _environment(spark)
 
     # warm the JVM + parquet footers once (excluded from timing)
     qs["q_scan_project"](spark, sf_dir).count()
 
-    calibration = round(_calibration(spark), 3)
-    overhead = round(_overhead(spark), 3)
-    print(
-        f"# calibration: {calibration:.2f}s  per-job overhead: {overhead:.3f}s",
-        file=sys.stderr,
-    )
+    if full:
+        calibration = round(_calibration(spark), 3)
+        overhead = round(_overhead(spark), 3)
+        print(
+            f"# calibration: {calibration:.2f}s  per-job overhead: {overhead:.3f}s",
+            file=sys.stderr,
+        )
 
     # Failure isolation: one broken query must never erase the round's
-    # entire perf evidence (r4: q_events_sessionize crashed the harness
-    # before the JSON line printed — BENCH_r04 had no numbers at all).
-    # A failed entry reports {"err": ...}; every other measurement and
-    # the final JSON line still land.
+    # entire perf evidence — a failed entry reports {"err": ...} and
+    # every other measurement and the final JSON line still land.
     timings: dict[str, object] = {}
     jobs: dict[str, int] = {}
     spreads: dict[str, float] = {}
-    family_of: dict[str, str] = {}
-    run_count: dict[str, int] = {}
+    runs_of: dict[str, int] = {}
+    totals = {"headline": 0.0, "extended": 0.0}
     errors = 0
-
-    for family, names, runs in (
-        ("headline", HEADLINE, RUNS_HEADLINE),
-        ("extended", extended, RUNS_EXTENDED),
-    ):
-        for name in names:
+    with obs.recording() if args.phases else contextlib.nullcontext() as spans:
+        for name in keys:
             fn = qs[name]
+            runs = RUNS_HEADLINE if name in HEADLINE else RUNS_EXTENDED
             try:
                 ts, nj = _timed_runs(
-                    spark, f"bench:{name}",
-                    lambda: fn(spark, sf_dir).count(), runs,
+                    spark, name, lambda: fn(spark, sf_dir).count(), runs
                 )
             except Exception as exc:  # noqa: BLE001 — isolate, report, continue
                 errors += 1
@@ -299,67 +290,27 @@ def main() -> None:
             timings[name] = round(dt, 3)
             jobs[name] = nj
             spreads[name] = round(max(ts) - min(ts), 3)
-            family_of[name] = family
-            run_count[name] = runs
-            print(f"# {name}: {dt:.2f}s ({nj} jobs)", file=sys.stderr)
-
-    # Noisy-host sentinel (r15 VERDICT item 2b): when the per-job floor
-    # sits above the r7-r13 band, the whole window is suspect — the
-    # heaviest keys get ONE more full median-of-N measurement and the
-    # official number is the MIN of the two medians (a key cannot get
-    # slower by re-measuring; a phase-window stall cannot own it).
-    sentinel: dict[str, object] = {
-        "triggered": bool(overhead > OVERHEAD_BAND_MAX),
-        "overhead_band_max": OVERHEAD_BAND_MAX,
-        "reran": {},
-    }
-    if sentinel["triggered"]:
-        heavy = sorted(
-            (k for k, v in timings.items() if isinstance(v, (int, float))),
-            key=lambda k: -timings[k],
-        )[:SENTINEL_HEAVY_KEYS]
-        print(
-            f"# noise sentinel: overhead {overhead:.3f}s > "
-            f"{OVERHEAD_BAND_MAX} band — re-measuring {heavy}",
-            file=sys.stderr,
-        )
-        for name in heavy:
-            fn = qs[name]
-            try:
-                ts2, _ = _timed_runs(
-                    spark, f"bench2:{name}",
-                    lambda: fn(spark, sf_dir).count(), run_count[name],
-                )
-            except Exception as exc:  # noqa: BLE001 — keep the first median
-                print(
-                    f"# sentinel {name}: ERROR {type(exc).__name__}",
-                    file=sys.stderr,
-                )
-                continue
-            m2 = statistics.median(ts2)
-            sentinel["reran"][name] = {
-                "first": timings[name],
-                "second": round(m2, 3),
-            }
-            timings[name] = round(min(timings[name], m2), 3)
+            runs_of[name] = runs
+            totals["headline" if name in HEADLINE else "extended"] += timings[name]
             print(
-                f"# sentinel {name}: {m2:.2f}s -> official "
-                f"{timings[name]:.2f}s",
+                f"# {name}: {dt:.2f}s ({nj} jobs, spread {spreads[name]:.2f}s)",
                 file=sys.stderr,
             )
 
-    totals = {"headline": 0.0, "extended": 0.0}
-    totals_unadj = {"headline": 0.0, "extended": 0.0}
-    for name, fam in family_of.items():
-        v = timings[name]
-        if isinstance(v, (int, float)):
-            totals[fam] += v
-            # unadjusted twin: the pre-sentinel (first) median — equal
-            # to the official number unless the sentinel lowered it
-            first = sentinel["reran"].get(name, {}).get("first", v)
-            totals_unadj[fam] += first
+    if args.phases:
+        from perfbench.eventlog import Fold
 
-    # ETL convert benchmark: the reference's core operation.
+        app_id = spark.sparkContext.applicationId
+        spark.stop()  # flushes and closes the event log
+        _print_phases(Fold(os.path.join(trace_dir, app_id), spans), runs_of)
+        shutil.rmtree(trace_dir, ignore_errors=True)
+    if not full:
+        print(json.dumps({
+            "queries": timings, "queries_jobs": jobs, "queries_spread": spreads,
+            "errors": errors, "sf": sf, "env": env,
+        }))
+        return
+
     try:
         dt, n_rows = _etl_bench(spark, sf_dir)
         timings["etl_convert_csv"] = round(dt, 3)
@@ -374,31 +325,6 @@ def main() -> None:
         timings["etl_convert_csv"] = {"err": f"{type(exc).__name__}: {exc}"[:500]}
         print(f"# etl_convert_csv: ERROR {type(exc).__name__}", file=sys.stderr)
 
-    # Overhead-floor-normalized per-key column (r14 VERDICT item 5):
-    # raw medians carry the host's fixed per-job floor (overhead_sec),
-    # which shifted r14's per-key seconds ~uniformly +0.12-0.23s with
-    # zero code change.  (median - overhead) subtracts that floor so
-    # cross-round per-key comparison no longer needs the BENCH_NOTES
-    # exegesis; clamped at 0 (a key faster than the probe is all
-    # floor).  Raw medians stay the primary column — the normalized
-    # one is the cross-round comparator.
-    normalized = {
-        k: round(max(0.0, v - overhead), 3)
-        for k, v in timings.items()
-        if isinstance(v, (int, float)) and k != "etl_convert_rows_per_sec"
-    }
-    # job-count normalization (r15 VERDICT item 2a): a key that runs J
-    # jobs pays the floor J times — q_merge_upsert (multiple actions)
-    # was the r15 record's biggest "regressor" purely because the
-    # single-subtraction column under-corrected it by (J-1)*overhead
-    normalized_per_job = {
-        k: round(max(0.0, v - jobs.get(k, 1) * overhead), 3)
-        for k, v in timings.items()
-        if isinstance(v, (int, float)) and k != "etl_convert_rows_per_sec"
-    }
-    # r18 job-count regression columns (docstring): total + per-key
-    # delta vs the previous committed record
-    jobs_total = sum(jobs.values())
     jobs_delta = {
         k: {"prev": prev_jobs.get(k), "now": jobs.get(k)}
         for k in sorted(set(prev_jobs) | set(jobs))
@@ -410,27 +336,14 @@ def main() -> None:
         "unit": "sec",
         "stat": f"median_of_{RUNS_HEADLINE}",
         "queries": timings,
-        "queries_normalized": normalized,
-        "queries_normalized_per_job": normalized_per_job,
         "queries_jobs": jobs,
-        "jobs_total": jobs_total,
+        "jobs_total": sum(jobs.values()),
         "jobs_total_prev": sum(prev_jobs.values()) if prev_jobs else None,
         "queries_jobs_delta": jobs_delta,
         "queries_spread": spreads,
-        "noise_sentinel": sentinel,
         "extended_total": round(totals["extended"], 3),
-        # unadjusted totals (r17 — the stated sentinel policy): every
-        # key at its FIRST median, before any min-of-medians
-        # replacement; equal to the official totals when the sentinel
-        # did not fire
-        "headline_total_unadjusted": round(totals_unadj["headline"], 3),
-        "extended_total_unadjusted": round(totals_unadj["extended"], 3),
         "extended_stat": f"median_of_{RUNS_EXTENDED}",
         "calibration_sec": calibration,
-        # r14 ADVICE: the calibration workload tripled at r14 (50M ->
-        # 150M rows, reported raw) — record the size so time-series
-        # consumers can segment baseline_ratio by calibration regime
-        # instead of inferring the r13/r14 boundary from BENCH_NOTES
         "calibration_rows": CALIBRATION_ROWS,
         "overhead_sec": overhead,
         "baseline_ratio": round(totals["headline"] / calibration, 3)
@@ -438,81 +351,37 @@ def main() -> None:
         else None,
         "errors": errors,
         "sf": sf,
-        # run-selection policy (r17 ADVICE, stated in-record): the
-        # committed BENCH_RESULT.json is ALWAYS the most recent full
-        # bench.py run at the committed HEAD — never a hand-picked
-        # best-of-N boot.  Cross-boot comparison runs live under
-        # plans/<round>/ and are labeled there.
+        "env": env,
+        # the committed BENCH_RESULT.json is always the latest full run
+        # at HEAD, never a hand-picked best-of-N boot
         "run_policy": "latest full run at HEAD; no best-of-boot selection",
     }
-    # Durable full record: the driver captures only the last ~2,000
-    # chars of stdout, which severed the 137-key per-query dict from
-    # BENCH_r06.json ("parsed": null).  The complete record lives in
-    # BENCH_RESULT.json next to this script; the stdout line keeps the
-    # same shape but carries only the HEADLINE per-query timings (plus
-    # errored keys) so it always fits the capture window intact.
+    # The full record lives in BENCH_RESULT.json; the stdout line keeps
+    # the same shape with the HEADLINE per-key timings (plus errored
+    # keys), and the per-key jobs and spread as arrays in that order.
     with open(os.path.join(here, "BENCH_RESULT.json"), "w") as f:
         json.dump(record, f, indent=1)
     compact = dict(record)
-    # jobs_total / jobs_total_prev stay on the line (two ints); the
-    # keyed per-key delta is file-only like the other keyed dicts
     del compact["queries_jobs_delta"]
     compact["queries"] = {
         k: (v if not isinstance(v, dict) else {"err": str(v.get("err"))[:80]})
         for k, v in timings.items()
         if k in HEADLINE or isinstance(v, dict)
     }
-    # The stdout capture window is ~2,000 chars; full keyed dicts would
-    # overflow it (measured 1,980+ for two), so the per-key companion
-    # columns ride as PARALLEL ARRAYS in the exact iteration order of
-    # compact["queries"]'s non-error entries (normalized at 2dp, jobs
-    # as ints, spread at 2dp; the keyed full-precision dicts live in
-    # BENCH_RESULT.json).  normalized_per_job stays file-only — it is
-    # derivable on the line as raw - jobs*overhead_sec.
-    # file-only column: derivable on the line as raw - jobs*overhead
-    del compact["queries_normalized_per_job"]
-    ordered = [k for k in compact["queries"] if k in normalized]
-    compact["queries_normalized"] = {
-        "order": "queries",
-        "vals": [round(normalized[k], 2) for k in ordered],
-    }
-    compact["queries_jobs"] = {
-        "order": "queries",
-        "vals": [jobs.get(k, 1) for k in ordered],
-    }
+    ordered = [k for k in compact["queries"] if k in jobs]
+    compact["queries_jobs"] = {"order": "queries", "vals": [jobs[k] for k in ordered]}
     compact["queries_spread"] = {
-        "order": "queries",
-        "vals": [round(spreads.get(k, 0.0), 2) for k in ordered],
-    }
-    # sentinel verdict on the line (full first/second medians in the
-    # file record): triggered flag + which keys had their official
-    # number improved by the re-measurement
-    compact["noise_sentinel"] = {
-        "triggered": sentinel["triggered"],
-        "improved": sorted(
-            k
-            for k, v in sentinel["reran"].items()
-            if v["second"] < v["first"]
-        ),
+        "order": "queries", "vals": [round(spreads[k], 2) for k in ordered],
     }
     compact["full_record"] = "BENCH_RESULT.json"
     line = json.dumps(compact)
-    # shedding ladder — drop the most-derivable column first
-    # (normalized = raw - overhead_sec, both already on the line); the
-    # r16 jobs and spread columns outrank it (VERDICT r15 item 2's
-    # record contract), and the totals + sentinel verdict always land
-    # before the raw per-key dict goes
-    for shed in ("queries_normalized", "queries_spread", "queries_jobs"):
-        if len(line) > 1900:
-            compact[shed] = {"see": "BENCH_RESULT.json"}
-            line = json.dumps(compact)
-    if len(line) > 1900:
-        compact["queries"] = {"truncated": "see BENCH_RESULT.json"}
+    if len(line) > STDOUT_LIMIT:
+        for k in ("queries", "queries_jobs", "queries_spread"):
+            compact[k] = {"see": "BENCH_RESULT.json"}
         line = json.dumps(compact)
     print(line)
-    # exit 0 even with errors: the JSON line above is the record, and a
-    # nonzero rc risks the harness discarding the valid measurements
-    # (the r4 failure mode); the "errors" field flags the gap instead.
+    # exit 0 even with errors: the JSON line above is the record, and
+    # the "errors" field flags the gap
 
 
 def _etl_bench(spark, sf_dir: str) -> tuple[float, int]:

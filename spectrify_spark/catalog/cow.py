@@ -17,11 +17,10 @@ millions of groups maintainable per-delta.
 Everything rides the EXISTING publish protocol — a cow version lands
 through ``publish_dir`` (same write order: payload -> manifest ->
 COMMITTED -> atomic pointer flip; crashed partials swept; time travel
-free), and retention rides the EXISTING pin-aware vacuum:
-:func:`vacuum_cow` computes the version numbers any RETAINED manifest
-still references and passes them as the ``protect=`` set, so a version
+free), and retention rides the EXISTING vacuum, which keeps every
+version number a RETAINED manifest still references — so a version
 directory whose files a live manifest points into is never evicted,
-however old.
+however old, by the publish-tail vacuum or any other.
 
 Layout::
 
@@ -46,6 +45,8 @@ import base64
 import json
 
 from pyspark.sql import DataFrame, functions as F
+
+from spectrify_spark.obs import span
 
 #: per-version manifest: {"schema": <json>, "parts": {enc: "v=K"}}
 COW_MANIFEST = "_spectrify_cow_manifest.json"
@@ -89,6 +90,7 @@ def _read_manifest(spark, root: str, version: "int | None" = None) -> dict:
     return m
 
 
+@span("cow", "publish")
 def publish_cow_update(
     spark,
     root: str,
@@ -298,36 +300,19 @@ def cow_partition_versions(
     }
 
 
-def _window_versions(root: str, keep_versions: int, spark=None) -> list:
-    """The manifest versions the ordinary keep window retains — the
-    newest ``keep_versions`` COMMITTED versions at or below the
-    pointer, plus the pointed one (the same window
-    :func:`catalog.publish.vacuum` computes)."""
-    from spectrify_spark.catalog.publish import (
-        _is_committed,
-        _versions,
-        current_version,
-    )
-
-    cur = current_version(root, spark)
-    if cur is None:
-        return []
-    published = [
-        v
-        for v in _versions(root, spark)
-        if v <= cur and _is_committed(root, v, spark)
-    ]
-    return sorted(set(published[-keep_versions:]) | {cur})
-
-
 def cow_referenced_versions(
     spark, root: str, manifest_versions: "list | None" = None
 ) -> "set[int]":
     """Version numbers the given manifests (default: every committed
     one) still reference — the set a vacuum of those manifests'
-    survivors must not evict.  Driver-side JSON reads, bounded by
+    survivors must not evict.  A version without a manifest (a plain
+    publish) references nothing.  Driver-side JSON reads, bounded by
     |versions| x |partitions|."""
-    from spectrify_spark.catalog.publish import _is_committed, _versions
+    from spectrify_spark.catalog.publish import (
+        _is_committed,
+        _read_version_json,
+        _versions,
+    )
 
     if manifest_versions is None:
         manifest_versions = [
@@ -335,34 +320,6 @@ def cow_referenced_versions(
         ]
     refs: set[int] = set()
     for v in manifest_versions:
-        try:
-            m = _read_manifest(spark, root, version=v)
-        except FileNotFoundError:
-            continue
-        for vd in m["parts"].values():
-            refs.add(int(vd[2:]))
+        m = _read_version_json(root, v, COW_MANIFEST, spark) or {}
+        refs.update(int(vd[2:]) for vd in m.get("parts", {}).values())
     return refs
-
-
-def vacuum_cow(
-    root: str, keep_versions: int = 2, spark=None
-) -> list[int]:
-    """Retention for copy-on-write datasets: the ordinary keep window
-    applies to MANIFEST versions, but a version directory whose files
-    a RETAINED manifest still references must survive however old —
-    exactly the pin-aware vacuum's ``protect=`` contract, so this is
-    a thin composition: compute which manifests the window keeps,
-    collect the version numbers THOSE manifests reference, and hand
-    the set to :func:`catalog.publish.vacuum` as ``protect=``.  (The
-    references must come from the RETAINED manifests only: every
-    manifest references its own version, so protecting all manifests'
-    references would keep every old version alive forever.)  A data
-    version outside the window is reclaimed the moment no retained
-    manifest names it."""
-    from spectrify_spark.catalog.publish import vacuum
-
-    retained = _window_versions(root, keep_versions, spark)
-    refs = cow_referenced_versions(spark, root, manifest_versions=retained)
-    return vacuum(
-        root, keep_versions=keep_versions, spark=spark, protect=refs
-    )

@@ -72,6 +72,8 @@ import uuid
 
 from pyspark.sql import DataFrame, functions as F
 
+from spectrify_spark.obs import span
+
 logger = logging.getLogger(__name__)
 
 #: underscore prefix keeps the pointer invisible to any parquet scan
@@ -194,10 +196,13 @@ def _mark_committed(spark, root: str, n: int, extra: "dict | None" = None) -> No
     write_json_sidecar(spark, _join(root, f"v={n}"), COMMITTED, payload)
 
 
-def _read_commit_marker(root: str, n: int, spark=None) -> "dict | None":
+def _read_version_json(
+    root: str, n: int, name: str, spark=None
+) -> "dict | None":
+    """``v=n/<name>`` parsed as JSON, or None when it is absent."""
     lp = _local_path(root)
     if lp is not None:
-        p = os.path.join(lp, f"v={n}", COMMITTED)
+        p = os.path.join(lp, f"v={n}", name)
         if not os.path.isfile(p):
             return None
         try:
@@ -208,7 +213,7 @@ def _read_commit_marker(root: str, n: int, spark=None) -> "dict | None":
     from spectrify_spark.operators._sidecar import read_json_sidecar
 
     return read_json_sidecar(
-        _require_spark(spark, root, "read"), _join(root, f"v={n}"), COMMITTED
+        _require_spark(spark, root, "read"), _join(root, f"v={n}"), name
     )
 
 
@@ -220,7 +225,7 @@ def _version_schema(root: str, n: int, spark=None):
     partition columns are appended on read, in inferred types, so the
     DataFrame's schema is not the scan's).  Versions are immutable, so
     the record cannot go stale."""
-    marker = _read_commit_marker(root, n, spark) or {}
+    marker = _read_version_json(root, n, COMMITTED, spark) or {}
     recorded = marker.get("schema")
     if recorded is None or marker.get("partition_by") != []:
         return None
@@ -630,7 +635,7 @@ def _check_schema_evolution(
     cur = current_version(root, spark)
     if cur is None:
         return
-    marker = _read_commit_marker(root, cur, spark) or {}
+    marker = _read_version_json(root, cur, COMMITTED, spark) or {}
     recorded = marker.get("schema")
     if recorded is None:
         return
@@ -771,22 +776,24 @@ def publish(
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(vdir)
-        if stats_cols:
-            from spectrify_spark.operators.layout import write_file_stats
+        if not (stats_cols or bloom_cols):
+            return
+        # the version was just written from df: pass its schema so the
+        # index builds skip footer inference (r18).  A partitioned
+        # write folds partition_by columns into dirs, so only the
+        # unpartitioned layout knows the file schema.
+        fschema = df.schema if not partition_by else None
+        with span("publish", "index"):
+            if stats_cols:
+                from spectrify_spark.operators.layout import write_file_stats
 
-            # the version was just written from df: pass its schema so
-            # the index builds skip footer inference (r18).  A
-            # partitioned write folds partition_by columns into dirs,
-            # so only the unpartitioned layout knows the file schema.
-            fschema = df.schema if not partition_by else None
-            write_file_stats(spark, vdir, stats_cols, schema=fschema)
-            _write_version_rollup(spark, vdir, stats_cols)
-        if bloom_cols:
-            from spectrify_spark.operators.layout import write_file_bloom
+                write_file_stats(spark, vdir, stats_cols, schema=fschema)
+                _write_version_rollup(spark, vdir, stats_cols)
+            if bloom_cols:
+                from spectrify_spark.operators.layout import write_file_bloom
 
-            fschema = df.schema if not partition_by else None
-            write_file_bloom(spark, vdir, bloom_cols, schema=fschema)
-            _write_version_bloom_rollup(spark, vdir, bloom_cols)
+                write_file_bloom(spark, vdir, bloom_cols, schema=fschema)
+                _write_version_bloom_rollup(spark, vdir, bloom_cols)
 
     # sweep exception: a leftover dir the INPUT DataFrame reads from (a
     # caller salvaging a crashed partial by republishing it) must
@@ -896,7 +903,8 @@ def _publish_version(
                     _remove_dir(root, f"v={v}", spark)
         n = max(_versions(root, spark), default=0) + 1
         vdir = _join(root, f"v={n}")
-        land_fn(vdir)
+        with span("publish", "land"):
+            land_fn(vdir)
         if not _dir_exists(root, f"v={n}", spark):
             raise ValueError(
                 f"{caller}: the landing step returned without creating "
@@ -918,17 +926,20 @@ def _publish_version(
                 "concurrent publish won; this publish was abandoned "
                 "(single-writer contract violated by the callers)"
             )
-        _mark_committed(spark, root, n, extra=marker_extra)
-        _pointer_write(spark, root, n)
-        # sweep-exempt leftovers NOW sit below the new pointer, where the
-        # generic vacuum quarantines unmarked dirs (they are
-        # indistinguishable from marker-loss victims there) — remove them
-        # here instead: the landing step has fully materialized the new
-        # version, so the lazy reads that justified the exemption are done
-        for v in salvaged:
-            if not _is_committed(root, v, spark):
-                _remove_dir(root, f"v={v}", spark)
-        vacuum(root, keep_versions=keep_versions, spark=spark)
+        with span("publish", "commit"):
+            _mark_committed(spark, root, n, extra=marker_extra)
+            _pointer_write(spark, root, n)
+        with span("publish", "vacuum"):
+            # sweep-exempt leftovers NOW sit below the new pointer, where
+            # the generic vacuum quarantines unmarked dirs (they are
+            # indistinguishable from marker-loss victims there) — remove
+            # them here instead: the landing step has fully materialized
+            # the new version, so the lazy reads that justified the
+            # exemption are done
+            for v in salvaged:
+                if not _is_committed(root, v, spark):
+                    _remove_dir(root, f"v={v}", spark)
+            vacuum(root, keep_versions=keep_versions, spark=spark)
         return n
     finally:
         _release_publish_lock(root, lock, spark)
@@ -1075,9 +1086,15 @@ def vacuum(
     ``keep_versions`` or retire the pinning snapshot) and is NOT
     counted in the returned removed list.  Publish-tail vacuums
     (:func:`publish` / :func:`publish_dir` call this with neither
-    lever) still honor only the keep window — a pipeline whose
+    lever) honor only the keep window — a pipeline whose
     components are snapshot-pinned should size ``keep_versions`` to
-    cover snapshot retention and run pin-aware vacuums out of band.  Crashed-publish partials (no
+    cover snapshot retention and run pin-aware vacuums out of band.
+
+    COPY-ON-WRITE REFERENCES: a retained version whose copy-on-write
+    manifest (:mod:`catalog.cow`) maps partitions into older version
+    directories keeps those directories too, silently and however old
+    — their files are the live data of a readable version, so every
+    vacuum, the publish tail included, spares them.  Crashed-publish partials (no
     :data:`COMMITTED` marker) never consume window slots: a version
     number cannot tell an orphan from a published version once a
     later publish allocates past it, which is exactly how an orphan
@@ -1139,6 +1156,9 @@ def _vacuum_locked(
     keep = set(published[-keep_versions:]) | (
         {cur} if cur is not None else set()
     )
+    from spectrify_spark.catalog.cow import cow_referenced_versions
+
+    keep |= cow_referenced_versions(spark, root, manifest_versions=keep)
     removed = []
     for v in vs:
         if (cur is None or v > cur) and _is_committed(root, v, spark):

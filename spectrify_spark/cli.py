@@ -317,16 +317,6 @@ def main(argv: list[str] | None = None) -> int:
         help="snapshot dataset roots whose pins on ROOT must survive",
     )
 
-    vcw = sub.add_parser(
-        "vacuum-cow",
-        help="reference-aware retention for copy-on-write datasets "
-        "(catalog/cow.py): manifest versions outside the keep window "
-        "go; data versions referenced by any RETAINED manifest "
-        "survive however old",
-    )
-    vcw.add_argument("root", help="copy-on-write dataset root")
-    vcw.add_argument("--keep-versions", type=int, default=2)
-
     rr = sub.add_parser(
         "rollup-refresh",
         help="incrementally refresh a published rollup with a delta "
@@ -766,20 +756,6 @@ def main(argv: list[str] | None = None) -> int:
             snapshots=args.snapshots,
         )
         print(json.dumps({"removed": removed}))
-    elif args.cmd == "vacuum-cow":
-        from spectrify_spark.catalog.cow import vacuum_cow
-
-        print(
-            json.dumps(
-                {
-                    "removed": vacuum_cow(
-                        args.root,
-                        keep_versions=args.keep_versions,
-                        spark=spark,
-                    )
-                }
-            )
-        )
     elif args.cmd == "rollup-refresh":
         from spectrify_spark.operators.incremental import (
             maintain_published_rollup,

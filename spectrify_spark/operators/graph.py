@@ -17,7 +17,7 @@ Design (same discipline as ``dedup.connected_components``):
   edges once (``repartition(src)``) and every iteration's shuffle
   reuses that layout;
 - every round's state is checkpointed (:func:`~spectrify_spark.
-  operators.dedup._truncate_lineage`): without lineage truncation the
+  operators.dedup._truncate_lazy`): without lineage truncation the
   plan doubles per iteration and planning time becomes the bottleneck
   long before data size does.
 """
@@ -28,6 +28,7 @@ import itertools
 
 from pyspark.sql import DataFrame, functions as F
 
+from spectrify_spark.obs import span
 from spectrify_spark.operators.dedup import _truncate_lazy
 
 #: observation names must be unique within a single query execution;
@@ -134,43 +135,44 @@ def pagerank(
 
     ranks = nodes.select("id", F.lit(1.0).alias("rank"))
     for _ in range(iters):
-        sums = (
-            contrib_edges.join(
-                ranks, contrib_edges["src"] == ranks["id"]
-            )
-            .select(F.col("dst").alias("id"), (F.col("rank") * F.col("__w")).alias("__c"))
-            .groupBy("id")
-            .agg(F.sum("__c").alias("__in"))
-        )
-        base = nodes.join(sums, "id", "left")
-        if redistribute_dangling:
-            dm = (
-                ranks.join(dangling, "id", "leftsemi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
-            )
-            ranks = _truncate_lazy(
-                base.crossJoin(F.broadcast(dm)).select(
-                    "id",
-                    (
-                        F.lit(1.0 - damping)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("__in"), F.lit(0.0))
-                            + F.col("__dm") / F.lit(float(n_nodes))
-                        )
-                    ).alias("rank"),
+        with span("graph", "pagerank_round"):
+            sums = (
+                contrib_edges.join(
+                    ranks, contrib_edges["src"] == ranks["id"]
                 )
+                .select(F.col("dst").alias("id"), (F.col("rank") * F.col("__w")).alias("__c"))
+                .groupBy("id")
+                .agg(F.sum("__c").alias("__in"))
             )
-        else:
-            ranks = _truncate_lazy(
-                base.select(
-                    "id",
-                    (
-                        F.lit(1.0 - damping)
-                        + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-                    ).alias("rank"),
+            base = nodes.join(sums, "id", "left")
+            if redistribute_dangling:
+                dm = (
+                    ranks.join(dangling, "id", "leftsemi")
+                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dm"))
                 )
-            )
+                ranks = _truncate_lazy(
+                    base.crossJoin(F.broadcast(dm)).select(
+                        "id",
+                        (
+                            F.lit(1.0 - damping)
+                            + F.lit(damping)
+                            * (
+                                F.coalesce(F.col("__in"), F.lit(0.0))
+                                + F.col("__dm") / F.lit(float(n_nodes))
+                            )
+                        ).alias("rank"),
+                    )
+                )
+            else:
+                ranks = _truncate_lazy(
+                    base.select(
+                        "id",
+                        (
+                            F.lit(1.0 - damping)
+                            + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                        ).alias("rank"),
+                    )
+                )
     return ranks
 
 
@@ -224,18 +226,19 @@ def hits(
     )
     auths = None
     for _ in range(iters):
-        raw_auth = (
-            e.join(hubs, e["src"] == hubs["id"])
-            .groupBy(e["dst"].alias("id"))
-            .agg(F.sum("hub").alias("auth"))
-        )
-        auths = _truncate_lazy(_l1_normalize(raw_auth, "auth"))
-        raw_hub = (
-            e.join(auths, e["dst"] == auths["id"])
-            .groupBy(e["src"].alias("id"))
-            .agg(F.sum("auth").alias("hub"))
-        )
-        hubs = _truncate_lazy(_l1_normalize(raw_hub, "hub"))
+        with span("graph", "hits_round"):
+            raw_auth = (
+                e.join(hubs, e["src"] == hubs["id"])
+                .groupBy(e["dst"].alias("id"))
+                .agg(F.sum("hub").alias("auth"))
+            )
+            auths = _truncate_lazy(_l1_normalize(raw_auth, "auth"))
+            raw_hub = (
+                e.join(auths, e["dst"] == auths["id"])
+                .groupBy(e["src"].alias("id"))
+                .agg(F.sum("auth").alias("hub"))
+            )
+            hubs = _truncate_lazy(_l1_normalize(raw_hub, "hub"))
     return hubs.select(
         "id", F.lit("hub").alias("kind"), F.col("hub").alias("score")
     ).unionByName(
@@ -491,8 +494,9 @@ def connected_components(
     # round should not count against the productive budget (a
     # graph converging exactly on round max_iters is converged)
     for _ in range(max_iters + 1):
-        e = _truncate_lazy(_small_star(_large_star(e)))
-        new_sig = _signature(e)
+        with span("graph", "cc_round"):
+            e = _truncate_lazy(_small_star(_large_star(e)))
+            new_sig = _signature(e)
         if new_sig == sig:
             converged = True
             break
@@ -731,24 +735,25 @@ def label_propagation(
         F.col("__c").desc(), F.col("label").asc()
     )
     for _ in range(iters):
-        votes = (
-            sym.join(
-                labels.select(
-                    F.col("id").alias("u"), F.col("label")
-                ),
-                "u",
+        with span("graph", "lpa_round"):
+            votes = (
+                sym.join(
+                    labels.select(
+                        F.col("id").alias("u"), F.col("label")
+                    ),
+                    "u",
+                )
+                .groupBy(F.col("v").alias("id"), "label")
+                .agg(F.count(F.lit(1)).alias("__c"))
             )
-            .groupBy(F.col("v").alias("id"), "label")
-            .agg(F.count(F.lit(1)).alias("__c"))
-        )
-        best = (
-            votes.withColumn("__r", F.row_number().over(w))
-            .filter(F.col("__r") == 1)
-            .select("id", F.col("label").alias("__new"))
-        )
-        labels = _truncate_lazy(
-            labels.join(best, "id", "left").select(
-                "id", F.coalesce("__new", "label").alias("label")
+            best = (
+                votes.withColumn("__r", F.row_number().over(w))
+                .filter(F.col("__r") == 1)
+                .select("id", F.col("label").alias("__new"))
             )
-        )
+            labels = _truncate_lazy(
+                labels.join(best, "id", "left").select(
+                    "id", F.coalesce("__new", "label").alias("label")
+                )
+            )
     return labels

@@ -340,9 +340,9 @@ def maintain_published_rollup_cow(
 
     Refresh cost is |delta| + |touched partitions| in both read and
     write — independent of total group count, the stronger form of
-    the corpus-never-rescanned property.  Retention via
-    :func:`catalog.cow.vacuum_cow` (referenced data versions survive
-    the keep window).  Read back with :func:`read_rollup_cow`.
+    the corpus-never-rescanned property.  Retention is the
+    publish-tail vacuum, which keeps every data version a retained
+    manifest references, however old.  Read back with :func:`read_rollup_cow`.
     Insert-only, single writer, as the plain form."""
     from spectrify_spark.catalog.cow import (
         publish_cow_update,

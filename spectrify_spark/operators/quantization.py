@@ -35,6 +35,8 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
+from spectrify_spark.obs import span
+
 
 def deterministic_codebooks(
     m_subspaces: int,
@@ -591,6 +593,7 @@ def _cell_shard_partitioning(
     )
 
 
+@span("ivfpq", "build")
 def write_ivfpq_index(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -797,6 +800,7 @@ def append_ivfpq_index(
     )
 
 
+@span("ivfpq", "probe")
 def ivfpq_topk(
     spark,
     path: str,
@@ -1512,6 +1516,7 @@ def _index_knn_join(
     )
 
 
+@span("ivfpq", "probe_join")
 def ivfpq_knn_join(
     spark,
     path: str,

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spectrify_spark.functions.vectors import cosine, dot, norm
+from spectrify_spark.obs import span
 
 logger = logging.getLogger(__name__)
 
@@ -115,7 +116,8 @@ def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFram
     broadcast ROW the matrix is data, not expression tree: the plan
     carries three attribute references regardless of size, the
     broadcast ships once per executor, and planning time is flat in
-    both parameters (tools/ivf_plan_rehearsal.py; PERF_NOTES r10)."""
+    both parameters (PERF_NOTES r10, "IVF centroid assignment
+    de-literalized")."""
     if not centroids:
         raise ValueError("need at least one centroid")
     row = (
@@ -218,6 +220,7 @@ def assign_partitions(
     )
 
 
+@span("ivf", "probe")
 def ivf_topk(
     assigned: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -314,6 +317,7 @@ def kmeans_refine(
     return current
 
 
+@span("ivf", "probe_join")
 def ivf_knn_join(
     assigned: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -405,6 +409,7 @@ def cluster_sizes(
 _IVF_SIDECAR = "_spectrify_ivf_centroids.json"
 
 
+@span("ivf", "build")
 def write_ivf_index(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -829,7 +834,7 @@ def ann_drift_report(
     - ``delta_fraction`` = appended rows / build rows (parquet footer
       counts only — no data read).  Even same-distribution appends
       dilute the centroid fit; the r15 rehearsal
-      (tools/append_recall_rehearsal.py, table in BENCH_NOTES.md)
+      (BENCH_NOTES.md r15, "post-append ANN recall gate")
       measures recall@10 vs delta fraction, and the default 0.5
       trigger fires before the measured knee.
     - ``max_cell_appended_share`` = the largest single cell's share of
@@ -853,7 +858,7 @@ def ann_drift_report(
       (random vectors are near-orthogonal to every centroid) so the
       ratio moves little (~1.08 measured for a fully-shifted append)
       — which is exactly why the share metric above exists.  Measured
-      per-family sensitivity (tools/adc_residual_rehearsal.py,
+      per-family sensitivity (BENCH_NOTES.md r16,
       clustered corpus, spread-out 6x-noise append that leaves share
       and delta silent): raw IVF and IVF-SQ carry the signal almost
       identically (ratio ~10.8 — SQ's 256-level midpoints track raw

@@ -63,7 +63,7 @@ def get_spark(
     # components): when set (HDFS/S3 path on a cluster), lineage cuts
     # are fault-tolerant; unset, they fall back to localCheckpoint
     # (fast, but an executor loss is unrecoverable — see
-    # operators/dedup.py::_truncate_lineage).
+    # operators/dedup.py::_truncate_lazy).
     ckpt = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt and not spark.sparkContext.getCheckpointDir():
         spark.sparkContext.setCheckpointDir(ckpt)

@@ -23,10 +23,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spectrify_spark.catalog import publish as _pub
+from spectrify_spark.obs import span
 from spectrify_spark.operators.dedup import dedup_exact
 from spectrify_spark.operators.relational import merge_changes
 
 
+@span("cdc", "merge_and_publish")
 def _merge_and_publish(
     changes: DataFrame,
     root: str,
@@ -98,6 +100,7 @@ def stream_apply_changes_published(
     base_cols = [c for c in changes.columns if c != op_col]
     base_schema = changes.select(*base_cols).schema
 
+    @span("cdc", "batch")
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         # r18 (guide §1.2): persist the micro-batch once — the
         # emptiness guard, the merge's anti-join key build, and the

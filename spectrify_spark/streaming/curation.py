@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spectrify_spark.functions import text as TX
+from spectrify_spark.obs import span
 from spectrify_spark.pipelines.training_data import annotate_gate
 from spectrify_spark.streaming.cdc import _merge_and_publish
 
@@ -160,12 +161,13 @@ def stream_curate_dedup_publish(
     out_cols = ["id", "text_clean", "lang", "quality", "n_tokens", "split"]
     base_schema = deduped.select(*out_cols).schema
 
+    @span("curation", "batch")
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         # r18 pass-count audit (guide §1.2): a persist-once handoff was
         # tried here and REVERTED — unlike the stateless foreachBatch
-        # sinks (streaming/rollup.py, streaming/cdc.py, where the
-        # accumulator rehearsal tools/foreachbatch_rehearsal.py proves
-        # 2x -> 1x source scans), a STATEFUL micro-batch plan is never
+        # sinks (streaming/rollup.py, streaming/cdc.py, where a source
+        # accumulator measured 2x -> 1x source scans — PERF_NOTES.md,
+        # "foreachBatch source passes"), a STATEFUL micro-batch plan is never
         # substituted from the SQL cache (persist left the write job
         # re-running the post-shuffle dedup stage from reused shuffle
         # data), and the expensive map side (source scan + curation
@@ -269,13 +271,14 @@ def stream_curate_snapshot_publish(
     out_cols = ["id", "text_clean", "lang", "quality", "n_tokens", "split"]
     base_schema = deduped.select(*out_cols).schema
 
+    @span("curation", "snapshot_batch")
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         # r18 pass-count audit: persist-once was tried and REVERTED
         # here for the same reason as stream_curate_dedup_publish —
         # the stateful micro-batch plan never hits the SQL cache, and
         # the map side already runs exactly once across this sink's
         # actions via exchange reuse (source-accumulator evidence in
-        # tools/foreachbatch_rehearsal.py's write-up).
+        # PERF_NOTES.md, "foreachBatch source passes").
         if not batch.take(1):
             return
         _apply_batch_inner(batch)

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from spectrify_spark.obs import span
+
 #: per-version marker naming the highest micro-batch id merged into
 #: that version — committed atomically with the data by the pointer
 #: flip (underscore prefix keeps it invisible to parquet scans)
@@ -87,6 +89,7 @@ def stream_rollup_publish(
 
     _check_specs(specs)
 
+    @span("rollup", "batch")
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         last = last_merged_batch_id(spark, root)

@@ -16,9 +16,8 @@ from spectrify_spark.catalog.cow import (
     cow_referenced_versions,
     publish_cow_update,
     read_published_cow,
-    vacuum_cow,
 )
-from spectrify_spark.catalog.publish import current_version
+from spectrify_spark.catalog.publish import current_version, vacuum
 from spectrify_spark.operators.incremental import (
     finalize_rollup,
     maintain_published_rollup_cow,
@@ -106,7 +105,7 @@ def test_vacuum_cow_protects_referenced_versions(spark, tmp_path):
             spark, root, _rows(spark, [("b", i)]), "k", keep_versions=9
         )
     assert current_version(root) == 4
-    removed = vacuum_cow(root, keep_versions=2, spark=spark)
+    removed = vacuum(root, keep_versions=2, spark=spark)
     # v1 holds partition a, referenced by EVERY retained manifest —
     # it must survive; v2 is unreferenced and outside the window
     assert 1 not in removed and 2 in removed
@@ -119,12 +118,42 @@ def test_vacuum_cow_protects_referenced_versions(spark, tmp_path):
     publish_cow_update(
         spark, root, _rows(spark, [("b", 9)]), "k", keep_versions=9
     )
-    removed2 = vacuum_cow(root, keep_versions=2, spark=spark)
+    removed2 = vacuum(root, keep_versions=2, spark=spark)
     assert 1 in removed2
     assert _content(read_published_cow(spark, root)) == {
         ("a", 9),
         ("b", 9),
     }
+
+
+def test_cow_publish_at_default_keep_keeps_referenced_data(spark, tmp_path):
+    """The publish-tail vacuum spares what a retained manifest maps:
+    after {a,b}, {b}, {b} at the default keep window, v=3 still maps a
+    to v=1, so v=1 survives and the read returns a's rows."""
+    root = str(tmp_path / "ds")
+    publish_cow_update(spark, root, _rows(spark, [("a", 1), ("b", 2)]), "k")
+    publish_cow_update(spark, root, _rows(spark, [("b", 3)]), "k")
+    publish_cow_update(spark, root, _rows(spark, [("b", 4)]), "k")
+    versions = sorted(d for d in os.listdir(root) if d.startswith("v="))
+    assert versions == ["v=1", "v=2", "v=3"]  # v=1 outside the window
+    assert _content(read_published_cow(spark, root)) == {("a", 1), ("b", 4)}
+
+
+def test_cow_rollup_three_refreshes_at_default_keep(spark, tmp_path):
+    """The cow rollup refresh passes the default keep window through to
+    the same publish-tail vacuum: a third refresh that touches only b
+    must still read a from v=1."""
+    root = str(tmp_path / "ds")
+    deltas = [
+        _rows(spark, [("a", 1), ("b", 2)]),
+        _rows(spark, [("b", 3)]),
+        _rows(spark, [("b", 4)]),
+    ]
+    for d in deltas:
+        maintain_published_rollup_cow(spark, root, d, ["k"], SPECS)
+    union = deltas[0].unionByName(deltas[1]).unionByName(deltas[2])
+    want = finalize_rollup(rollup_delta(union, ["k"], SPECS), ["k"], SPECS)
+    assert _content(read_rollup_cow(spark, root, ["k"], SPECS)) == _content(want)
 
 
 def test_cow_rollup_refresh_touches_only_delta_partitions(spark, tmp_path):

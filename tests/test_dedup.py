@@ -1,5 +1,6 @@
 """Dedup operator tests on hand-built corpora with known duplicates."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from spectrify_spark.operators import dedup
@@ -99,6 +100,17 @@ def test_connected_components_chains(spark):
     pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"])
     comp = {r.id: r.cluster_id for r in dedup.connected_components(pairs).collect()}
     assert comp == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
+def test_connected_components_raises_when_the_budget_runs_out(spark):
+    """A 5-hop chain needs 5 productive rounds: max_iters=5 converges
+    (the confirming round is free), max_iters=4 would leave node 5 with
+    a partial label, so it raises instead."""
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], ["id_a", "id_b"])
+    comp = dedup.connected_components(pairs, max_iters=5).collect()
+    assert {r.id: r.cluster_id for r in comp} == {i: 0 for i in range(6)}
+    with pytest.raises(ValueError, match="still changing after 4 rounds"):
+        dedup.connected_components(pairs, max_iters=4)
 
 
 def test_dedup_clusters_end_to_end(spark):

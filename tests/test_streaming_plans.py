@@ -91,7 +91,7 @@ GOLDEN = {
     # the publish write each load the 8 stores once (2 x 8; the
     # expensive MAP side still executes exactly once per batch via
     # exchange reuse — source-accumulator evidence in
-    # tools/foreachbatch_rehearsal.py's scope note).  The r17 pin of 8
+    # PERF_NOTES.md, "foreachBatch source passes").  The r17 pin of 8
     # was an artifact of the final micro-batch's action pattern under
     # the old two-append source layout; the scale property — state
     # scoped to 8 partitions, bounded by the watermark — is the
