@@ -702,10 +702,11 @@ def publish(
     hand-modified dirs).  Both families additionally roll up to
     VERSION-level sidecars — ``stats_cols`` into a min/max summary
     (:data:`VERSION_STATS`, read by :func:`published_pruned_scan`),
-    ``bloom_cols`` into a bit-OR'd union bloom (:data:`VERSION_BLOOM`,
-    read by :func:`published_pruned_scan_eq`) — so a reader can rule
-    out a whole version from one tiny JSON read, without listing its
-    files or opening the per-file index.
+    ``bloom_cols`` into a bit-OR'd union bloom stored as a packed
+    bitmap (:data:`VERSION_BLOOM`, ``m_bits/8`` bytes per column, read
+    by :func:`published_pruned_scan_eq`) — so a reader can rule out a
+    whole version from one small JSON read, without listing its files
+    or opening the per-file index.
 
     SCHEMA EVOLUTION (r17): the new version's schema must match the
     pointed version's — an additive change (new columns only) needs
@@ -1376,11 +1377,17 @@ def _write_version_bloom_rollup(spark, vdir: str, cols: list[str]) -> None:
     positions are not all set in the rollup is PROVABLY absent from
     the whole version.  Columns whose per-file rows disagree on
     (m_bits, k_hashes, dtype) are omitted — omission is safe (the
-    reader falls through to the per-file tier).  Sidecar size is
-    bounded by m_bits ints per column (8192 by default, ~50 KB of
-    JSON) — independent of the file count."""
+    reader falls through to the per-file tier).  Each column is one
+    packed bitmap (``"bitmap"``, :func:`layout._bloom_pack`):
+    ``ceil(m_bits/8)`` bytes as base64, 1,368 characters at the
+    8192-bit default — independent of the file count and of how many
+    bits are set."""
     from spectrify_spark.operators._sidecar import write_json_sidecar
-    from spectrify_spark.operators.layout import FILE_BLOOM_DIR, _read_stats_rows
+    from spectrify_spark.operators.layout import (
+        FILE_BLOOM_DIR,
+        _bloom_pack,
+        _read_stats_rows,
+    )
 
     rows = _read_stats_rows(spark, f"{vdir}/{FILE_BLOOM_DIR}")
     if not rows:
@@ -1397,14 +1404,11 @@ def _write_version_bloom_rollup(spark, vdir: str, cols: list[str]) -> None:
         if len(fams) != 1:
             continue  # mixed hash families: a rollup would prove nothing
         m_bits, k_hashes, dtype = next(iter(fams))
-        bits: set[int] = set()
-        for r in mine:
-            bits.update(int(b) for b in r["bits"])
         out[c] = {
             "m_bits": m_bits,
             "k_hashes": k_hashes,
             "dtype": dtype,
-            "bits": sorted(bits),
+            "bitmap": _bloom_pack((r["bits"] for r in mine), m_bits),
         }
     write_json_sidecar(spark, vdir, VERSION_BLOOM, out)
 
@@ -1419,21 +1423,24 @@ def published_pruned_scan_eq(
 ) -> DataFrame:
     """Point lookup over a published version with TWO pruning tiers:
     (1) the version-level bloom rollup — if the probe's bit positions
-    are not all set, the value is PROVABLY absent from the whole
-    version: return the empty scan after one JSON read (no file
-    listing, no per-file index open — at 10^6 files per version that
-    is the difference between a metadata no-op and a planning
-    stampede); (2) otherwise the per-file bloom pruning
+    are not all set in its packed bitmap, the value is PROVABLY absent
+    from the whole version: return the empty scan after one JSON read
+    of ``m_bits/8`` bytes per column (no file listing, no per-file
+    index open — at 10^6 files per version that is the difference
+    between a metadata no-op and a planning stampede); (2) otherwise
+    the per-file bloom pruning
     (:func:`spectrify_spark.operators.layout.pruned_scan_eq`).  Same
     conservative contract as every skipping tier: an unverifiable
-    probe canonicalization or a missing rollup only costs pruning,
-    never rows; NULL probes return the empty result directly (SQL
-    equality never matches NULL).  ``spark_side`` passes through to
-    the per-file tier exactly as on :func:`published_pruned_scan`
+    probe canonicalization, a missing rollup or one without a
+    ``"bitmap"`` (the retired ``"bits"`` list form) only costs
+    pruning, never rows; NULL probes return the empty result directly
+    (SQL equality never matches NULL).  ``spark_side`` passes through
+    to the per-file tier exactly as on :func:`published_pruned_scan`
     (None = file-count threshold, True = forced Spark arm, False =
     forced driver arm)."""
     from spectrify_spark.operators._sidecar import read_json_sidecar
     from spectrify_spark.operators.layout import (
+        _bloom_may_contain,
         _bloom_positions_py,
         pruned_scan_eq,
     )
@@ -1451,19 +1458,16 @@ def published_pruned_scan_eq(
         return _scan(spark, schema, vdir).filter(F.lit(False))
     rollup = read_json_sidecar(spark, vdir, VERSION_BLOOM) or {}
     s = rollup.get(col)
-    if s:
+    if s and "bitmap" in s:
+        m_bits = int(s["m_bits"])
         pos = _bloom_positions_py(
-            value,
-            int(s["m_bits"]),
-            int(s["k_hashes"]),
-            dtype=s.get("dtype", ""),
+            value, m_bits, int(s["k_hashes"]), dtype=s.get("dtype", "")
         )
-        # bits materializes ONCE before the membership test: rebuilding
-        # a set of up to m_bits ints per hash position would put an
-        # O(k·m) loop on the very driver-side probe path the rollup
-        # exists to make cheap
-        bits = set(s["bits"])
-        if pos is not None and any(p not in bits for p in pos):
+        # the bitmap decodes once and the k probe bits are tested in
+        # place — no set of up to m_bits ints on the probe path
+        if pos is not None and not _bloom_may_contain(
+            s["bitmap"], m_bits, pos
+        ):
             return _scan(spark, schema, vdir).filter(F.lit(False))
     return pruned_scan_eq(
         spark, vdir, col, value, spark_side=spark_side, schema=schema

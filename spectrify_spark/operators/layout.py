@@ -1081,6 +1081,38 @@ def _bloom_positions_py(
     ]
 
 
+def _bloom_pack(bit_lists, m_bits: int) -> str:
+    """OR every bit-position list of ``bit_lists`` into one packed
+    bitmap of ``ceil(m_bits/8)`` bytes, returned as base64 text.  Bit
+    p sits in byte ``p >> 3`` at bit ``p & 7`` — Spark's own
+    ``bitmap_*`` order.  m/8 bytes (1,368 base64 characters at the
+    8192-bit default) instead of a JSON list of every set position:
+    the reader pays py4j per byte of sidecar."""
+    import base64
+
+    bitmap = bytearray((m_bits + 7) >> 3)
+    for bits in bit_lists:
+        for p in bits:
+            bitmap[p >> 3] |= 1 << (p & 7)
+    return base64.b64encode(bitmap).decode("ascii")
+
+
+def _bloom_may_contain(bitmap: str, m_bits: int, positions) -> bool:
+    """False only when the packed bitmap (:func:`_bloom_pack`) PROVES
+    the value absent: one of its probe ``positions`` is unset.  The
+    bitmap decodes once; a bitmap that does not decode to exactly
+    ``ceil(m_bits/8)`` bytes proves nothing (True)."""
+    import base64
+
+    try:
+        raw = base64.b64decode(bitmap, validate=True)
+    except (TypeError, ValueError):  # binascii.Error is a ValueError
+        return True
+    if len(raw) != (m_bits + 7) >> 3:
+        return True
+    return all(raw[p >> 3] >> (p & 7) & 1 for p in positions)
+
+
 def write_file_bloom(
     spark,
     path: str,

@@ -260,7 +260,7 @@ def test_published_pruned_scan_eq_version_bloom(spark, tmp_path):
     sidecar = os.path.join(current_path(root), VERSION_BLOOM)
     rollup = json.load(open(sidecar))
     assert set(rollup) == {"k"} and rollup["k"]["m_bits"] == 8192
-    assert 0 < len(rollup["k"]["bits"]) <= 8192
+    assert 0 < len(_bitmap_positions(rollup["k"]["bitmap"])) <= 8192
 
     # present value: exact row through both tiers
     got = published_pruned_scan_eq(spark, root, "k", 150).collect()
@@ -280,6 +280,118 @@ def test_published_pruned_scan_eq_version_bloom(spark, tmp_path):
     root2 = str(tmp_path / "ds2")
     publish(_df(spark, 100, "c"), root2)
     assert published_pruned_scan_eq(spark, root2, "k", 50).count() == 1
+
+
+def _bitmap_positions(bitmap: str) -> set[int]:
+    """Set bit positions of a packed rollup bitmap (bit p in byte
+    p >> 3 at bit p & 7)."""
+    import base64
+
+    raw = base64.b64decode(bitmap)
+    return {
+        i * 8 + j for i, b in enumerate(raw) for j in range(8) if b >> j & 1
+    }
+
+
+def test_version_bloom_rollup_is_packed_or_of_file_blooms(
+    spark, tmp_path, monkeypatch
+):
+    """The version bloom rollup is one packed bitmap per column: it
+    decodes to exactly the OR of the per-file index rows' bits, every
+    probe position of a present key is set, an absent key it rules out
+    returns empty without the per-file tier running, and the sidecar
+    stays at m_bits/8 bytes (as base64) plus a small header."""
+    import base64
+    import math
+
+    import pyarrow.parquet as pq
+
+    from spectrify_spark.catalog.publish import (
+        VERSION_BLOOM,
+        current_path,
+        published_pruned_scan_eq,
+    )
+    from spectrify_spark.operators import layout
+
+    root = str(tmp_path / "ds")
+    df = _df(spark, 1000, "a").repartition(4, F.col("k"))
+    publish(df, root, bloom_cols=["k", "tag"])
+    vdir = current_path(root)
+    sidecar = os.path.join(vdir, VERSION_BLOOM)
+    rollup = json.load(open(sidecar))
+    assert set(rollup) == {"k", "tag"}
+    rows = pq.read_table(os.path.join(vdir, layout.FILE_BLOOM_DIR)).to_pylist()
+    for c, s in rollup.items():
+        assert "bits" not in s
+        want = set().union(*(r["bits"] for r in rows if r["col"] == c))
+        assert _bitmap_positions(s["bitmap"]) == want, c
+    m_bits = rollup["k"]["m_bits"]
+    assert os.path.getsize(sidecar) <= len(rollup) * (
+        4 * math.ceil(m_bits / 24) + 200
+    )
+
+    s = rollup["k"]
+    set_bits = _bitmap_positions(s["bitmap"])
+    # the bit order is Spark's own: bitmap_construct_agg over the same
+    # positions sets the same bytes (its 32,768-bit bitmap zero-padded)
+    spark_bitmap = (
+        spark.createDataFrame([(p,) for p in sorted(set_bits)], "p long")
+        .agg(F.expr("bitmap_construct_agg(p)"))
+        .first()[0]
+    )
+    assert bytes(spark_bitmap[: m_bits // 8]) == base64.b64decode(s["bitmap"])
+    assert not any(spark_bitmap[m_bits // 8 :])
+    for k in range(1000):
+        pos = layout._bloom_positions_py(k, m_bits, s["k_hashes"], s["dtype"])
+        assert set(pos) <= set_bits, k
+        assert layout._bloom_may_contain(s["bitmap"], m_bits, pos)
+    absent = next(
+        k
+        for k in range(10_000, 20_000)
+        if not set(
+            layout._bloom_positions_py(k, m_bits, s["k_hashes"], s["dtype"])
+        )
+        <= set_bits
+    )
+    # a bitmap that does not decode to m_bits/8 bytes proves nothing
+    pos = layout._bloom_positions_py(absent, m_bits, s["k_hashes"], s["dtype"])
+    assert not layout._bloom_may_contain(s["bitmap"], m_bits, pos)
+    assert layout._bloom_may_contain("AAAA", m_bits, pos)
+    assert layout._bloom_may_contain("not base64!", m_bits, pos)
+
+    def per_file_tier(*a, **kw):
+        raise AssertionError("the rollup should have ruled the key out")
+
+    monkeypatch.setattr(layout, "pruned_scan_eq", per_file_tier)
+    got = published_pruned_scan_eq(spark, root, "k", absent)
+    assert got.columns == ["k", "tag"] and got.count() == 0
+
+
+def test_version_bloom_list_form_proves_nothing(spark, tmp_path):
+    """A rollup in the retired ``"bits"`` list form is not read: even
+    an EMPTY list (which, read as a bloom, would rule every key out)
+    falls through to the per-file tier, which returns exactly the rows
+    of the plain equality filter."""
+    from spectrify_spark.catalog.publish import (
+        VERSION_BLOOM,
+        current_path,
+        published_pruned_scan_eq,
+    )
+    from spectrify_spark.operators._sidecar import write_json_sidecar
+
+    root = str(tmp_path / "ds")
+    publish(_df(spark, 200, "a").repartition(2), root, bloom_cols=["k"])
+    vdir = current_path(root)
+    new = json.load(open(os.path.join(vdir, VERSION_BLOOM)))["k"]
+    old = {key: new[key] for key in ("m_bits", "k_hashes", "dtype")}
+    write_json_sidecar(spark, vdir, VERSION_BLOOM, {"k": dict(old, bits=[])})
+
+    plain = read_published(spark, root)
+    for k in (0, 150, 199, 5000):
+        got = published_pruned_scan_eq(spark, root, "k", k).collect()
+        want = plain.filter(F.col("k") == k).collect()
+        assert sorted(got) == sorted(want), k
+    assert len(published_pruned_scan_eq(spark, root, "k", 150).collect()) == 1
 
 
 def test_vacuum_orphan_below_pointer_never_consumes_window(spark, tmp_path):
