@@ -4064,7 +4064,7 @@ def q_scan_bloom(spark, sf):
     min/max stats.  orderkeys hash-scattered over 8 files give every
     file a min/max spanning the whole domain — range pruning is
     USELESS by construction (the measured minmax_useless boolean pins
-    that) — yet the bloom (one sorted bit-position array per file,
+    that) — yet the bloom (one packed bitmap per file,
     engine-portable md5 hashes, built JVM-side in one pass) pins an
     equality probe to only the files that can contain the key, with
     zero false negatives.  Conservative like the stats index: unknown
@@ -4090,7 +4090,8 @@ def q_scan_bloom(spark, sf):
     write_file_stats(spark, work, ["l_orderkey"], schema=li.schema)
     # m=65536 = the full 16-bit md5-prefix domain: ~7.5k distinct keys
     # per file at sf0.001 fill ~50% of it, keeping fpp ~1.5% at k=6
-    # (the 8192 default is sized for ~1k distinct values per file)
+    # (explicit, so every scale factor probes the same width; the
+    # default sizes m from each file's row count)
     write_file_bloom(spark, work, ["l_orderkey"], m_bits=65536, schema=li.schema)
     # deterministic MID-DOMAIN existing key (max key <= max/2): every
     # file's hash-scattered [min, max] straddles it, so range pruning

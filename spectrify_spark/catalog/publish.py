@@ -699,14 +699,15 @@ def publish(
     version directory BEFORE the flip — a published version arrives
     pre-indexed, and because versions are immutable the indexes can
     never go stale (the conservative-staleness machinery still guards
-    hand-modified dirs).  Both families additionally roll up to
-    VERSION-level sidecars — ``stats_cols`` into a min/max summary
-    (:data:`VERSION_STATS`, read by :func:`published_pruned_scan`),
-    ``bloom_cols`` into a bit-OR'd union bloom stored as a packed
-    bitmap (:data:`VERSION_BLOOM`, ``m_bits/8`` bytes per column, read
-    by :func:`published_pruned_scan_eq`) — so a reader can rule out a
-    whole version from one small JSON read, without listing its files
-    or opening the per-file index.
+    hand-modified dirs).  Each per-file bloom is a packed bitmap sized
+    to its file (10 bits per row, 8,192 to 65,536 bits).  Both
+    families additionally roll up to VERSION-level sidecars —
+    ``stats_cols`` into a min/max summary (:data:`VERSION_STATS`, read
+    by :func:`published_pruned_scan`), ``bloom_cols`` into a bit-OR'd
+    union bloom folded to 8,192 bits (:data:`VERSION_BLOOM`, 1 KB per
+    column, read by :func:`published_pruned_scan_eq`) — so a reader
+    can rule out a whole version from one small JSON read, without
+    listing its files or opening the per-file index.
 
     SCHEMA EVOLUTION (r17): the new version's schema must match the
     pointed version's — an additive change (new columns only) needs
@@ -1372,20 +1373,31 @@ def published_pruned_scan(
 def _write_version_bloom_rollup(spark, vdir: str, cols: list[str]) -> None:
     """Union the freshly built per-file blooms into one VERSION-level
     bloom per column, stored as a JSON sidecar in the version dir.
-    Bit-OR of per-file bit sets is exactly the bloom of the union of
+    Bit-OR of per-file blooms is exactly the bloom of the union of
     the files' values (same m_bits/k_hashes family), so a probe whose
     positions are not all set in the rollup is PROVABLY absent from
-    the whole version.  Columns whose per-file rows disagree on
-    (m_bits, k_hashes, dtype) are omitted — omission is safe (the
-    reader falls through to the per-file tier).  Each column is one
-    packed bitmap (``"bitmap"``, :func:`layout._bloom_pack`):
-    ``ceil(m_bits/8)`` bytes as base64, 1,368 characters at the
-    8192-bit default — independent of the file count and of how many
-    bits are set."""
+    the whole version.  Per-file blooms are sized per file
+    (``layout.write_file_bloom``), so each is first folded down to
+    8,192 bits, or to the smallest m when one is below that (the OR of
+    its halves, :func:`layout._bloom_fold`): exactly the bloom of the
+    same keys at that m, so the rollup of a sized publish is bit for
+    bit the rollup of 8,192-bit per-file blooms.  A column is omitted
+    — omission is safe, the reader falls through to the per-file tier
+    — when its rows disagree on (k_hashes, dtype), when some row has
+    no ``bitmap`` of ``ceil(m_bits/8)`` bytes (the old ``bits`` array
+    form proves nothing), or when some m does not fold (the target
+    does not divide it) and the rows do not all share one m.  Each
+    column is one packed bitmap
+    (``"bitmap"``): ``ceil(m_bits/8)`` bytes as base64, bit p in byte
+    ``p >> 3`` at bit ``p & 7``, 1,368 characters at 8,192 bits —
+    independent of the file count and of how many bits are set."""
+    import base64
+
     from spectrify_spark.operators._sidecar import write_json_sidecar
     from spectrify_spark.operators.layout import (
+        BLOOM_MIN_BITS,
         FILE_BLOOM_DIR,
-        _bloom_pack,
+        _bloom_fold,
         _read_stats_rows,
     )
 
@@ -1395,20 +1407,31 @@ def _write_version_bloom_rollup(spark, vdir: str, cols: list[str]) -> None:
     out: dict = {}
     for c in cols:
         mine = [r for r in rows if r["col"] == c]
-        if not mine:
-            continue
-        fams = {
-            (int(r["m_bits"]), int(r["k_hashes"]), r.get("dtype", "") or "")
+        if not mine or any(
+            len(r.get("bitmap") or b"") != (int(r["m_bits"]) + 7) >> 3
             for r in mine
-        }
+        ):
+            continue
+        fams = {(int(r["k_hashes"]), r.get("dtype", "") or "") for r in mine}
         if len(fams) != 1:
             continue  # mixed hash families: a rollup would prove nothing
-        m_bits, k_hashes, dtype = next(iter(fams))
+        k_hashes, dtype = next(iter(fams))
+        ms = {int(r["m_bits"]) for r in mine}
+        m_bits = min(ms | {BLOOM_MIN_BITS})
+        if any(m % m_bits for m in ms):
+            if len(ms) != 1:
+                continue
+            m_bits = next(iter(ms))
+        folded = 0
+        for r in mine:
+            folded |= _bloom_fold(r["bitmap"], int(r["m_bits"]), m_bits)
         out[c] = {
             "m_bits": m_bits,
             "k_hashes": k_hashes,
             "dtype": dtype,
-            "bitmap": _bloom_pack((r["bits"] for r in mine), m_bits),
+            "bitmap": base64.b64encode(
+                folded.to_bytes((m_bits + 7) >> 3, "little")
+            ).decode("ascii"),
         }
     write_json_sidecar(spark, vdir, VERSION_BLOOM, out)
 

@@ -372,7 +372,13 @@ def main(argv: list[str] | None = None) -> int:
     )
     ibl.add_argument("source")
     ibl.add_argument("cols", nargs="+", metavar="COL")
-    ibl.add_argument("--m-bits", type=int, default=8192)
+    ibl.add_argument(
+        "--m-bits",
+        type=int,
+        default=None,
+        help="bloom width in bits, at most 65536 (default: sized per "
+        "file, 10 bits per row within 8192..65536)",
+    )
     ibl.add_argument("--k-hashes", type=int, default=6)
     ibl.add_argument("--append", action="store_true")
 

@@ -1081,43 +1081,70 @@ def _bloom_positions_py(
     ]
 
 
-def _bloom_pack(bit_lists, m_bits: int) -> str:
-    """OR every bit-position list of ``bit_lists`` into one packed
-    bitmap of ``ceil(m_bits/8)`` bytes, returned as base64 text.  Bit
-    p sits in byte ``p >> 3`` at bit ``p & 7`` — Spark's own
-    ``bitmap_*`` order.  m/8 bytes (1,368 base64 characters at the
-    8192-bit default) instead of a JSON list of every set position:
-    the reader pays py4j per byte of sidecar."""
-    import base64
+#: per-file bloom sizing: m is the smallest power of two holding
+#: :data:`BLOOM_BITS_PER_ROW` bits per non-NULL row of the file-column
+#: (about a 1 % false-positive rate at k=6), within these bounds.  The
+#: floor is the version rollup's width (:func:`_bloom_fold`); the cap
+#: is the 16-bit ``hash_bucket`` position width
+BLOOM_MIN_BITS = 8192
+BLOOM_MAX_BITS = 65536
+BLOOM_BITS_PER_ROW = 10
 
-    bitmap = bytearray((m_bits + 7) >> 3)
-    for bits in bit_lists:
-        for p in bits:
-            bitmap[p >> 3] |= 1 << (p & 7)
-    return base64.b64encode(bitmap).decode("ascii")
+#: bits per ``bitmap_construct_agg`` bucket
+_SPARK_BITMAP_BITS = 32768
 
 
-def _bloom_may_contain(bitmap: str, m_bits: int, positions) -> bool:
-    """False only when the packed bitmap (:func:`_bloom_pack`) PROVES
-    the value absent: one of its probe ``positions`` is unset.  The
-    bitmap decodes once; a bitmap that does not decode to exactly
+def _bloom_sized_m(rows: int) -> int:
+    """Python twin of the build's per-file m (see :data:`BLOOM_MIN_BITS`)."""
+    m = BLOOM_MIN_BITS
+    while m < BLOOM_MAX_BITS and m < BLOOM_BITS_PER_ROW * rows:
+        m <<= 1
+    return m
+
+
+def _bloom_may_contain(bitmap, m_bits: int, positions) -> bool:
+    """False only when the packed bitmap PROVES the value absent: one
+    of its probe ``positions`` is unset.  Bit p sits in byte ``p >> 3``
+    at bit ``p & 7`` — Spark's own ``bitmap_*`` order.  ``bitmap`` is
+    the raw bytes (a per-file index row) or their base64 text (the
+    version rollup); one that does not decode to exactly
     ``ceil(m_bits/8)`` bytes proves nothing (True)."""
-    import base64
+    if isinstance(bitmap, str):
+        import base64
 
-    try:
-        raw = base64.b64decode(bitmap, validate=True)
-    except (TypeError, ValueError):  # binascii.Error is a ValueError
+        try:
+            bitmap = base64.b64decode(bitmap, validate=True)
+        except (TypeError, ValueError):  # binascii.Error is a ValueError
+            return True
+    if not isinstance(bitmap, (bytes, bytearray)) or len(bitmap) != (
+        m_bits + 7
+    ) >> 3:
         return True
-    if len(raw) != (m_bits + 7) >> 3:
-        return True
-    return all(raw[p >> 3] >> (p & 7) & 1 for p in positions)
+    return all(bitmap[p >> 3] >> (p & 7) & 1 for p in positions)
+
+
+def _bloom_fold(bitmap: bytes, m_bits: int, to_bits: int) -> int:
+    """The ``m_bits`` bloom folded down to ``to_bits`` bits (which must
+    divide ``m_bits``), as an int whose bit p is the folded bloom's bit
+    p: the OR of its ``to_bits``-wide slices.  A position is
+    ``h % m_bits`` of a 16-bit hash h, and ``(h % m) % t == h % t``
+    when t divides m, so the fold is exactly the ``to_bits`` bloom of
+    the same keys.  The bytes read as a little-endian int keep the
+    bitmap's bit order (bit p in byte ``p >> 3`` at bit ``p & 7``)."""
+    v = int.from_bytes(bitmap, "little")
+    mask = (1 << to_bits) - 1
+    out = 0
+    while v:
+        out |= v & mask
+        v >>= to_bits
+    return out
 
 
 def write_file_bloom(
     spark,
     path: str,
     cols: list[str],
-    m_bits: int = 8192,
+    m_bits: "int | None" = None,
     k_hashes: int = 6,
     append: bool = False,
     schema=None,
@@ -1128,14 +1155,17 @@ def write_file_bloom(
     One scan of the data for all of ``cols``: each row contributes
     ``k_hashes`` bit positions per non-NULL column value (md5 bucket
     of ``<key>:<i>`` — one JVM-side Column expression shared by every
-    column, no UDF), one ``collect_set`` grouped by (file, column)
-    gathers the SET bits, and the index stores them as a sorted sparse
-    int array (bounded by ``m_bits``; with the 8192x6 default and the
-    classic approximation the false-positive rate stays ~1% up to
-    ~1000 distinct values per file-column).  ``m_bits`` and
-    ``k_hashes`` are stored WITH each row and validated at probe time
-    (the count-min width lesson: a mismatched hash family silently
-    breaks the no-false-negative guarantee).
+    column, no UDF).  Each (file, column) row stores its bloom as
+    ``bitmap``, a packed ``binary`` of ``ceil(m_bits/8)`` bytes (bit p
+    in byte ``p >> 3`` at bit ``p & 7``, Spark's ``bitmap_*`` order).
+    ``m_bits`` defaults to sizing per file-column: the smallest power
+    of two of at least 10 bits per non-NULL row, within [8192, 65536]
+    (:func:`_bloom_sized_m`), so a bloom stays sparse enough to prune
+    whatever the file holds; an explicit ``m_bits`` (at most 65,536:
+    a position is 16 bits of md5) applies to every row.  ``m_bits``
+    and ``k_hashes`` are stored WITH each row and validated at probe
+    time (the count-min width lesson: a mismatched hash family
+    silently breaks the no-false-negative guarantee).
 
     Same staleness contract as :func:`write_file_stats`: probes keep
     files without an index row, so a stale bloom costs I/O, never
@@ -1147,8 +1177,13 @@ def write_file_bloom(
     """
     from spectrify_spark.functions.text import hash_bucket
 
-    if m_bits < 2 or k_hashes < 1:
-        raise ValueError(f"need m_bits >= 2, k_hashes >= 1; got {m_bits}x{k_hashes}")
+    if (m_bits is not None and not 2 <= m_bits <= BLOOM_MAX_BITS) or k_hashes < 1:
+        # a position is the first 4 hex digits of md5: every bit above
+        # 65,535 of a wider bloom would stay unset
+        raise ValueError(
+            f"need 2 <= m_bits <= {BLOOM_MAX_BITS}, k_hashes >= 1; "
+            f"got {m_bits}x{k_hashes}"
+        )
     bloom_path = f"{path}/{FILE_BLOOM_DIR}"
     targets = None
     if append:
@@ -1198,9 +1233,33 @@ def write_file_bloom(
             for ci, c in enumerate(cols)
         ]
     )
+    # the full 16-bit position: m is only known per file-column once
+    # its rows are counted, and h % m is hash_bucket(..., m) for any
+    # m <= 65536
     position = hash_bucket(
-        F.concat_ws(":", F.col("key"), F.col("i").cast("string")), m_bits
+        F.concat_ws(":", F.col("key"), F.col("i").cast("string")),
+        BLOOM_MAX_BITS,
     )
+    if m_bits is not None:
+        m_col = F.lit(m_bits)
+    else:
+        # _bloom_sized_m, with rows = n / k (n counts the k slots of
+        # each non-NULL row)
+        bits_wanted = F.col("n") * BLOOM_BITS_PER_ROW
+        m_col = F.lit(BLOOM_MAX_BITS)
+        m = BLOOM_MAX_BITS >> 1
+        while m >= BLOOM_MIN_BITS:
+            m_col = F.when(bits_wanted <= m * k_hashes, m).otherwise(m_col)
+            m >>= 1
+
+    def half(cond: str):
+        # bit p = h % m of the bloom; one bitmap_construct_agg bucket
+        # holds 32,768 bits, so a wider bloom aggregates two halves
+        return F.expr(
+            "bitmap_construct_agg(bitmap_bit_position(h % m_bits + 1)) "
+            f"FILTER (WHERE h % m_bits {cond} {_SPARK_BITMAP_BITS})"
+        )
+
     col_of = F.array(*[F.lit(c) for c in cols])
     dtype_of = F.array(*[F.lit(stored[c]) for c in cols])
     bloom = (
@@ -1215,16 +1274,22 @@ def write_file_bloom(
         # the position is projected BEFORE the aggregate: collect_set
         # runs in ObjectHashAggregate, which evaluates its inputs
         # without codegen (measured 30% slower at 6M rows)
-        .select("file", "ci", position.alias("b"))
+        .select("file", "ci", position.alias("h"))
         .groupBy("file", "ci")
-        .agg(F.sort_array(F.collect_set("b")).alias("bits"))
+        .agg(F.collect_set("h").alias("hs"), F.count(F.lit(1)).alias("n"))
+        .select("file", "ci", m_col.alias("m_bits"), F.explode("hs").alias("h"))
+        # grouped by the same (file, ci): no second exchange
+        .groupBy("file", "ci", "m_bits")
+        .agg(half("<").alias("lo"), half(">=").alias("hi"))
         .select(
             "file",
             col_of[F.col("ci")].alias("col"),
             dtype_of[F.col("ci")].alias("dtype"),
-            F.lit(m_bits).alias("m_bits"),
+            "m_bits",
             F.lit(k_hashes).alias("k_hashes"),
-            "bits",
+            F.concat("lo", "hi")
+            .substr(F.lit(1), F.shiftright(F.col("m_bits") + 7, 3))
+            .alias("bitmap"),
         )
     )
     # ONE pass: write, then count driver-side from the written table
@@ -1246,10 +1311,12 @@ def _prune_files_eq_spark(
     positions are computed driver-side per family with the SAME
     dtype-verified canonicalization (:func:`_bloom_positions_py` —
     unverifiable families contribute no pruning proof), and a Spark
-    job marks rows whose bits provably miss a position.  The surviving
-    set is the live list anti-joined against the pruned names — only
-    NAMES return to the driver, never the bits arrays (the heaviest
-    index rows this module stores).  Returns None when no bloom index
+    job marks rows whose bitmap provably misses a position (one byte
+    of the binary column per position).  The surviving set is the live
+    list anti-joined against the pruned names — only NAMES return to
+    the driver, never the bitmaps (the heaviest index rows this module
+    stores).  Parts in the old form (a ``bits`` array, no ``bitmap``)
+    prove nothing, as on the driver arm.  Returns None when no bloom index
     exists OR when it fails to read (same conservative except->None
     contract as :func:`_prune_files_spark` and the driver path)."""
     try:
@@ -1259,6 +1326,8 @@ def _prune_files_eq_spark(
         pruned = None
         for sch, parts in groups:
             fields = set(sch.fieldNames())
+            if "bitmap" not in fields:
+                continue  # old-form parts prove nothing
             sdf = (
                 spark.read.schema(sch)
                 .parquet(*parts)
@@ -1276,16 +1345,14 @@ def _prune_files_eq_spark(
             )
             cond = None
             for fr in fams:
+                m = int(fr["m_bits"])
                 pos = _bloom_positions_py(
-                    value,
-                    int(fr["m_bits"]),
-                    int(fr["k_hashes"]),
-                    dtype=fr["dtype"] or "",
+                    value, m, int(fr["k_hashes"]), dtype=fr["dtype"] or ""
                 )
                 if pos is None:
                     continue  # unverifiable canonicalization: keep files
                 fam_match = (
-                    (F.col("m_bits") == F.lit(int(fr["m_bits"])))
+                    (F.col("m_bits") == F.lit(m))
                     & (F.col("k_hashes") == F.lit(int(fr["k_hashes"])))
                     # null-safe: a NULL dtype inside a dtype-bearing
                     # schema group must match the "" family exactly as
@@ -1295,10 +1362,18 @@ def _prune_files_eq_spark(
                         F.coalesce(dtype_col, F.lit(""))
                         == F.lit(fr["dtype"] or "")
                     )
+                    # a bitmap of the wrong length proves nothing, as
+                    # in _bloom_may_contain
+                    & (F.octet_length("bitmap") == F.lit((m + 7) >> 3))
                 )
                 missing = F.lit(False)
                 for p in pos:
-                    missing = missing | ~F.array_contains(F.col("bits"), int(p))
+                    # the byte goes through hex: a cast to string would
+                    # decode bytes >= 0x80 as UTF-8
+                    byte = F.conv(
+                        F.hex(F.substring("bitmap", (p >> 3) + 1, 1)), 16, 10
+                    ).cast("int")
+                    missing = missing | (byte.bitwiseAND(1 << (p & 7)) == 0)
                 c = fam_match & missing
                 cond = c if cond is None else (cond | c)
             if cond is None:
@@ -1342,9 +1417,11 @@ def prune_files_eq(
     Spark job) below :data:`SPARK_PRUNE_FILE_THRESHOLD` live files;
     above it — or with ``spark_side=True`` — the bloom test runs as a
     Spark job + anti-join (:func:`_prune_files_eq_spark`), so the
-    driver never materializes the bits arrays on a cold probe
-    (identical surviving sets on both paths, pinned by
-    tests/test_layout.py)."""
+    driver never materializes the bitmaps on a cold probe (identical
+    surviving sets on both paths, pinned by tests/test_layout.py).
+    The driver arm tests the k probe bits in place in each row's
+    packed ``bitmap`` (:func:`_bloom_may_contain`); rows in the old
+    form (a ``bits`` array) prove nothing on either arm."""
     live = list_data_files(spark, path)
     if spark_side or (
         spark_side is None and len(live) > SPARK_PRUNE_FILE_THRESHOLD
@@ -1359,25 +1436,26 @@ def prune_files_eq(
     if rows is None:
         return live, len(live)
     pruned = set()
+    # the probe's positions depend only on the row's hash family: k
+    # md5s once per distinct (m_bits, k_hashes, dtype), not per row
+    positions: dict = {}
     for r in rows:
         if r["col"] != col:
             continue
-        pos = _bloom_positions_py(
-            value,
-            int(r["m_bits"]),
-            int(r["k_hashes"]),
-            # dtype "" = legacy pre-dtype index rows (plain
-            # cast('string') keys); _bloom_key_py accepts only the
-            # probe types whose str() provably matches that form
-            dtype=r.get("dtype", "") or "",
-        )
-        if pos is None:
-            # probe value's canonical key is unverifiable for this
-            # dtype: pruning here could drop files with matching rows
-            # (the false-negative hole) — keep the file
-            continue
-        bits = set(r["bits"])
-        if any(p not in bits for p in pos):
+        # dtype "" = legacy pre-dtype index rows (plain cast('string')
+        # keys); _bloom_key_py accepts only the probe types whose str()
+        # provably matches that form
+        fam = (int(r["m_bits"]), int(r["k_hashes"]), r.get("dtype", "") or "")
+        if fam not in positions:
+            positions[fam] = _bloom_positions_py(value, *fam)
+        pos = positions[fam]
+        # pos None: the probe value's canonical key is unverifiable for
+        # this dtype, and pruning could drop files with matching rows
+        # (the false-negative hole).  A row without a bitmap (the old
+        # ``bits`` array form) proves nothing either: keep the file
+        if pos is not None and not _bloom_may_contain(
+            r.get("bitmap"), fam[0], pos
+        ):
             pruned.add(r["file"])
     keep = [f for f in live if f not in pruned]
     return keep, len(live)

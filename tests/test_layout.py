@@ -428,6 +428,14 @@ def test_file_stats_multi_range_zorder_composition(spark, tmp_path):
 # -------------------------------------------------- bloom file index
 
 
+def _bitmap_bits(bitmap: bytes) -> set[int]:
+    """Set bit positions of a packed bloom bitmap (bit p in byte
+    p >> 3 at bit p & 7)."""
+    return {
+        i * 8 + j for i, b in enumerate(bitmap) for j in range(8) if b >> j & 1
+    }
+
+
 def test_file_bloom_point_lookup_prunes_where_minmax_cannot(spark, tmp_path):
     """High-cardinality ids scattered uniformly across files: every
     file's min/max spans ~the whole domain (range pruning useless),
@@ -505,6 +513,12 @@ def test_file_bloom_validates_params(spark, tmp_path):
 
     with pytest.raises(ValueError, match="m_bits"):
         write_file_bloom(spark, str(tmp_path), ["k"], m_bits=1)
+    # positions are the first 4 hex digits of md5: every bit above
+    # 65,535 of a wider bloom would stay unset
+    with pytest.raises(ValueError, match="m_bits"):
+        write_file_bloom(spark, str(tmp_path), ["k"], m_bits=65537)
+    with pytest.raises(ValueError, match="k_hashes"):
+        write_file_bloom(spark, str(tmp_path), ["k"], k_hashes=0)
 
 
 def test_file_bloom_no_false_negatives_property(spark, tmp_path):
@@ -543,7 +557,9 @@ def test_file_bloom_no_false_negatives_property(spark, tmp_path):
 
     rows = _read_stats_rows(spark, f"{path}/_spectrify_file_bloom")
     blooms = {
-        r["file"]: (set(r["bits"]), int(r["m_bits"]), int(r["k_hashes"]))
+        r["file"]: (
+            _bitmap_bits(r["bitmap"]), int(r["m_bits"]), int(r["k_hashes"])
+        )
         for r in rows
         if r["col"] == "k"
     }
@@ -711,7 +727,201 @@ def test_bloom_key_jvm_python_twins_all_dtypes(spark, tmp_path):
         r = stored[c]
         assert r["dtype"] == dtypes[c], c
         want = _bloom_positions_py(probe, r["m_bits"], r["k_hashes"], r["dtype"])
-        assert list(r["bits"]) == sorted(set(want)), c
+        assert len(r["bitmap"]) == (r["m_bits"] + 7) // 8, c
+        assert _bitmap_bits(r["bitmap"]) == set(want), c
+
+
+def _sized_bloom_dataset(spark, tmp_path) -> str:
+    """Five files of 500 to 8,000 rows (one append each): a bigint key
+    ``k`` and a string ``s`` that is NULL in every other row."""
+    path = str(tmp_path / "sized")
+    start = 0
+    for n in (500, 1000, 2000, 5000, 8000):
+        spark.range(start, start + n).select(
+            F.col("id").alias("k"),
+            F.when(
+                F.col("id") % 2 == 0, F.concat(F.lit("s"), F.col("id"))
+            ).alias("s"),
+        ).coalesce(1).write.mode("append").parquet(path)
+        start += n
+    return path
+
+
+def test_file_bloom_sized_per_file(spark, tmp_path):
+    """Without an explicit ``m_bits`` each (file, column) row records
+    its own m: the smallest power of two of at least 10 bits per
+    non-NULL row, within [8192, 65536], so m grows with the file.  The
+    bitmap is m/8 bytes and holds every present key's bits."""
+    from spectrify_spark.operators.layout import (
+        FILE_BLOOM_DIR,
+        _bloom_positions_py,
+        _bloom_sized_m,
+        _read_stats_rows,
+        write_file_bloom,
+    )
+
+    path = _sized_bloom_dataset(spark, tmp_path)
+    assert write_file_bloom(spark, path, ["k", "s"]) == 5
+    data = (
+        spark.read.parquet(path)
+        .select(
+            F.regexp_replace(F.input_file_name(), "^file:/+", "/").alias("f"),
+            "k",
+            "s",
+        )
+        .collect()
+    )
+    counts: dict = {}
+    for d in data:
+        for c in ("k", "s"):
+            if d[c] is not None:
+                counts[(d.f, c)] = counts.get((d.f, c), 0) + 1
+    rows = _read_stats_rows(spark, f"{path}/{FILE_BLOOM_DIR}")
+    assert len(rows) == len(counts) == 10
+    blooms = {(r["file"], r["col"]): r for r in rows}
+    for (f, c), r in blooms.items():
+        m = r["m_bits"]
+        assert m == _bloom_sized_m(counts[(f, c)]), (f, c)
+        assert 8192 <= m <= 65536 and m & (m - 1) == 0
+        assert len(r["bitmap"]) == m // 8
+    def m_by_rows(col):
+        return [
+            m for _, m in sorted(
+                (counts[key], r["m_bits"]) for key, r in blooms.items()
+                if key[1] == col
+            )
+        ]
+
+    # 500 to 8,000 rows; NULLs count no rows, so s holds 250 to 4,000
+    assert m_by_rows("k") == [8192, 16384, 32768, 65536, 65536]
+    assert m_by_rows("s") == [8192, 8192, 16384, 32768, 65536]
+    bits = {key: _bitmap_bits(r["bitmap"]) for key, r in blooms.items()}
+    for d in data[::7]:
+        for c in ("k", "s"):
+            if d[c] is None:
+                continue
+            r = blooms[(d.f, c)]
+            pos = _bloom_positions_py(d[c], r["m_bits"], r["k_hashes"], r["dtype"])
+            assert set(pos) <= bits[(d.f, c)], (d.f, c, d[c])
+
+
+def test_file_bloom_sized_lookup_reads_the_holding_file(spark, tmp_path):
+    """Four files of 3,750 scattered keys (every file's min/max spans
+    the domain): sized blooms keep at most 2 files for a present key,
+    the holding file always among them, and none for an absent key.
+    At a fixed m=8192 the same files kept 3.3 of 4."""
+    from spectrify_spark.operators.layout import (
+        prune_files_eq,
+        pruned_scan_eq,
+        write_file_bloom,
+    )
+
+    path = str(tmp_path / "lookup")
+    for j in range(4):
+        spark.range(j, 15_000, 4).select(F.col("id").alias("k")).coalesce(
+            1
+        ).write.mode("append").parquet(path)
+    write_file_bloom(spark, path, ["k"])
+    kept = []
+    for k in range(0, 15_000, 61):
+        keep, total = prune_files_eq(spark, path, "k", k)
+        assert total == 4 and 1 <= len(keep) <= 2, (k, keep)
+        kept.append(len(keep))
+    assert sum(kept) / len(kept) < 1.1
+    for k in (15_000, 20_000, -1, 123_456_789):
+        assert prune_files_eq(spark, path, "k", k)[0] == [], k
+    assert [r.k for r in pruned_scan_eq(spark, path, "k", 7_777).collect()] == [
+        7_777
+    ]
+
+
+def test_prune_files_eq_arms_agree_on_mixed_m(spark, tmp_path):
+    """Files of different sizes get blooms of different m: the driver
+    arm (one position list per hash family) and the Spark arm (one
+    byte of the binary column per position) keep identical files for
+    present, absent and unverifiable probes."""
+    from spectrify_spark.operators.layout import (
+        FILE_BLOOM_DIR,
+        _read_stats_rows,
+        prune_files_eq,
+        write_file_bloom,
+    )
+
+    path = _sized_bloom_dataset(spark, tmp_path)
+    write_file_bloom(spark, path, ["k", "s"])
+    ms = {r["m_bits"] for r in _read_stats_rows(spark, f"{path}/{FILE_BLOOM_DIR}")}
+    assert len(ms) == 4
+    probes = [("k", k) for k in (0, 499, 700, 2_000, 9_999, 16_499)]
+    probes += [("k", k) for k in (16_500, 99_999, -5)]
+    probes += [("s", "s0"), ("s", "s8000"), ("s", "s1"), ("s", "nope")]
+    probes += [("k", 5.5), ("k", "x")]  # unverifiable: nothing pruned
+    pruned_any = False
+    for col, value in probes:
+        drv, n_drv = prune_files_eq(spark, path, col, value, spark_side=False)
+        spk, n_spk = prune_files_eq(spark, path, col, value, spark_side=True)
+        assert n_drv == n_spk == 5
+        assert drv == spk, (col, value)
+        pruned_any |= len(drv) < 5
+    assert pruned_any
+    assert len(prune_files_eq(spark, path, "k", 5.5, spark_side=True)[0]) == 5
+
+
+def test_file_bloom_old_form_rows_prove_nothing(spark, tmp_path):
+    """An index part in the old form (a ``bits`` array per row, no
+    ``bitmap``) proves nothing on either arm or in the version rollup,
+    even when the array is EMPTY (which, read as a bloom, would rule
+    every key out); an ``append=True`` build onto it indexes only the
+    new file, in the packed form, and prunes through that row alone."""
+    import json
+    import os
+
+    from spectrify_spark.catalog.publish import (
+        VERSION_BLOOM,
+        _write_version_bloom_rollup,
+    )
+    from spectrify_spark.operators.layout import (
+        FILE_BLOOM_DIR,
+        list_data_files,
+        prune_files_eq,
+        pruned_scan_eq,
+        write_file_bloom,
+    )
+
+    path = str(tmp_path / "old")
+    spark.range(0, 1000).select(F.col("id").alias("k")).repartition(
+        4, F.col("k")
+    ).write.parquet(path)
+    old_files = list_data_files(spark, path)
+    spark.createDataFrame(
+        [(f, "k", "bigint", 8192, 6, []) for f in old_files],
+        "file string, col string, dtype string, m_bits int, k_hashes int, "
+        "bits array<int>",
+    ).coalesce(1).write.parquet(f"{path}/{FILE_BLOOM_DIR}")
+
+    def arms(value):
+        drv = prune_files_eq(spark, path, "k", value, spark_side=False)
+        spk = prune_files_eq(spark, path, "k", value, spark_side=True)
+        assert drv == spk, value
+        return drv[0]
+
+    assert arms(999_999) == old_files
+    _write_version_bloom_rollup(spark, path, ["k"])
+    with open(os.path.join(path, VERSION_BLOOM)) as fh:
+        assert json.load(fh) == {}
+
+    spark.range(5000, 5100).select(F.col("id").alias("k")).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+    assert write_file_bloom(spark, path, ["k"], append=True) == 1
+    new_file = sorted(set(list_data_files(spark, path)) - set(old_files))
+    assert arms(5050) == sorted(old_files + new_file)
+    assert arms(999_999) == old_files  # pruned through the new row alone
+    assert arms(150) == old_files
+    assert pruned_scan_eq(spark, path, "k", 150).count() == 1
+    assert pruned_scan_eq(spark, path, "k", 5050).count() == 1
+    _write_version_bloom_rollup(spark, path, ["k"])
+    with open(os.path.join(path, VERSION_BLOOM)) as fh:
+        assert json.load(fh) == {}
 
 
 def test_index_builds_run_two_jobs_each(spark, tmp_path, job_count):

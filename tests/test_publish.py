@@ -282,12 +282,12 @@ def test_published_pruned_scan_eq_version_bloom(spark, tmp_path):
     assert published_pruned_scan_eq(spark, root2, "k", 50).count() == 1
 
 
-def _bitmap_positions(bitmap: str) -> set[int]:
-    """Set bit positions of a packed rollup bitmap (bit p in byte
-    p >> 3 at bit p & 7)."""
+def _bitmap_positions(bitmap) -> set[int]:
+    """Set bit positions of a packed bitmap (bit p in byte p >> 3 at bit
+    p & 7): a rollup's base64 text or a per-file row's bytes."""
     import base64
 
-    raw = base64.b64decode(bitmap)
+    raw = base64.b64decode(bitmap) if isinstance(bitmap, str) else bitmap
     return {
         i * 8 + j for i, b in enumerate(raw) for j in range(8) if b >> j & 1
     }
@@ -323,7 +323,13 @@ def test_version_bloom_rollup_is_packed_or_of_file_blooms(
     rows = pq.read_table(os.path.join(vdir, layout.FILE_BLOOM_DIR)).to_pylist()
     for c, s in rollup.items():
         assert "bits" not in s
-        want = set().union(*(r["bits"] for r in rows if r["col"] == c))
+        # each per-file bitmap's set bits, folded to the rollup's width
+        want = {
+            p % s["m_bits"]
+            for r in rows
+            if r["col"] == c
+            for p in _bitmap_positions(r["bitmap"])
+        }
         assert _bitmap_positions(s["bitmap"]) == want, c
     m_bits = rollup["k"]["m_bits"]
     assert os.path.getsize(sidecar) <= len(rollup) * (
@@ -365,6 +371,39 @@ def test_version_bloom_rollup_is_packed_or_of_file_blooms(
     monkeypatch.setattr(layout, "pruned_scan_eq", per_file_tier)
     got = published_pruned_scan_eq(spark, root, "k", absent)
     assert got.columns == ["k", "tag"] and got.count() == 0
+
+
+def test_version_bloom_rollup_of_sized_blooms_is_the_8192_bit_rollup(
+    spark, tmp_path
+):
+    """Per-file blooms sized above 8,192 bits fold down to 8,192 before
+    the OR, so the rollup of a sized publish is byte for byte the
+    8,192-bit rollup of the same data: the OR of every value's
+    positions at m=8192."""
+    import base64
+
+    from spectrify_spark.catalog.publish import VERSION_BLOOM, current_path
+    from spectrify_spark.operators import layout
+
+    root = str(tmp_path / "ds")
+    df = _df(spark, 8000, "a").repartition(4, F.col("k"))
+    publish(df, root, bloom_cols=["k", "tag"])
+    vdir = current_path(root)
+    ms = {
+        r["m_bits"]
+        for r in layout._read_stats_rows(spark, f"{vdir}/{layout.FILE_BLOOM_DIR}")
+    }
+    assert min(ms) > 8192  # ~2,000 rows per file: every bloom folds
+    with open(os.path.join(vdir, VERSION_BLOOM)) as fh:
+        rollup = json.load(fh)
+    for c, values in (("k", range(8000)), ("tag", ["a"])):
+        s = rollup[c]
+        assert s["m_bits"] == 8192 and s["k_hashes"] == 6
+        want = bytearray(1024)
+        for v in values:
+            for p in layout._bloom_positions_py(v, 8192, 6, s["dtype"]):
+                want[p >> 3] |= 1 << (p & 7)
+        assert base64.b64decode(s["bitmap"]) == bytes(want), c
 
 
 def test_version_bloom_list_form_proves_nothing(spark, tmp_path):
